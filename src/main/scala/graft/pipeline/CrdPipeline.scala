@@ -128,6 +128,7 @@ object CrdPipeline {
       config: SyncPipeline.Config = SyncPipeline.Config())(
       implicit spark: SparkSession): StreamingQuery = {
     SyncPipeline.applyStateStoreConf(spark, config)
+    LocalCheckpointFileManager.install(spark)
     val actions = debounced(events, config.debounceMs)
     val maxBatch = config.maxBatch
     val writer = actions.writeStream

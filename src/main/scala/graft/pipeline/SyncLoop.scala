@@ -24,6 +24,7 @@ private[pipeline] object SyncLoop {
       apply: (Dataset[T], Long) => (Long, Long))(
       compact: () => Unit): StreamingQuery = {
     val applied = new java.util.concurrent.atomic.AtomicLong
+    LocalCheckpointFileManager.install(events.sparkSession)
     events.writeStream
       .outputMode("append")
       .trigger(Trigger.ProcessingTime(triggerMs))

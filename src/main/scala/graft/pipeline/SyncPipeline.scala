@@ -10,11 +10,16 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Timing contract vs the reference (BASELINE.md): the trigger interval is
   * the flush cadence (A15, BATCH_FLUSH_INTERVAL_MS); deletes reach the sink
-  * in the micro-batch where they arrive, so delete latency ≈ trigger
-  * interval — set it ≤ 500 ms to beat the reference's <1 s assertion while
-  * upserts are still held by a 10 s debounce. Checkpointing upgrades the
-  * reference's at-most-once delivery (drops on full channels) to
-  * exactly-once per epoch with idempotent upserts keyed on id.
+  * in the micro-batch that reads them, so delete latency = the wait for the
+  * next trigger (up to one interval, or the end of a running batch) plus
+  * one micro-batch (source read, state commit, delivery). Keep the interval
+  * ≤ 500 ms and the batch short to stay under the reference's <1 s
+  * assertion while upserts are still held by a 10 s debounce; checkpoint
+  * writes go through [[LocalCheckpointFileManager]] because under Spark's
+  * default local manager they were about half of a light batch.
+  * Checkpointing upgrades the reference's at-most-once delivery (drops on
+  * full channels) to exactly-once per epoch with idempotent upserts keyed
+  * on id.
   *
   * Recovery caveat: state (pending upserts + their timers) is restored from
   * the checkpoint, but a recovered processing-time timer only fires when a
@@ -154,55 +159,38 @@ object SyncPipeline {
   private val StateVersionFile = "_graft_state_version"
 
   /** Stamp-or-check the state shape version in the checkpoint dir. First
-    * start writes the stamp; every later start verifies it. Uses the Hadoop
-    * FS API so any checkpoint scheme (local, HDFS, object store) works.
+    * start writes the stamp; every later start verifies it. Goes through
+    * the session's checkpoint file manager, so any checkpoint scheme (local,
+    * HDFS, object store) works.
     */
   private[pipeline] def stampStateVersion(spark: SparkSession, dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+    import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
     val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
+    val fm = CheckpointFileManager.create(base, spark.sessionState.newHadoopConf())
     val p = new Path(base, StateVersionFile)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val found =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      require(found == StateVersion.toString,
-        s"checkpoint $dir was written with state version $found, this build " +
-          s"uses $StateVersion: start from a fresh checkpointLocation (a " +
-          "resync rebuilds downstream state) or run the matching build")
-    } else {
-      fs.mkdirs(base)
-      // WRITE-TEMP-THEN-RENAME, not create-in-place: a bare create(p,
-      // false) makes the path visible BEFORE the bytes land, so a racing
-      // loser could read the winner's still-empty stamp and fail a
-      // spurious version check. The rename makes the complete file appear
-      // atomically; losing the rename race (dest exists / rename refused)
-      // routes through the check path against a file that is guaranteed
-      // whole. This also covers filesystems that signal an existing file
-      // with a plain IOException instead of FileAlreadyExistsException —
-      // there is no create(p, false) on the final path at all.
-      val tmp = new Path(base,
-        s".${StateVersionFile}.tmp-${java.util.UUID.randomUUID()}")
-      val out = fs.create(tmp, true)
-      try out.write(s"$StateVersion\n".getBytes("UTF-8"))
-      finally out.close()
-      val won =
-        try !fs.exists(p) && fs.rename(tmp, p)
-        catch { case _: java.io.IOException => false }
-      if (!won) {
-        fs.delete(tmp, false)
-        // verify whoever won — BOUNDED: exactly one re-entry. If the stamp
-        // still doesn't exist after a lost race, the rename is failing for
-        // a reason racing can't explain (permissions, a broken FS) — fail
-        // loudly instead of recursing toward a StackOverflowError
-        require(fs.exists(p),
-          s"could not stamp state version in $dir: rename to $p failed and " +
-            "no concurrent starter produced the stamp — check filesystem " +
-            "permissions on the checkpoint location")
-        stampStateVersion(spark, dir) // exists now ⇒ takes the check branch
+    if (!fm.exists(p)) {
+      fm.mkdirs(base)
+      // atomic no-overwrite create: the stamp appears whole or not at all,
+      // and a racing starter that loses gets FileAlreadyExists and checks
+      // the winner's stamp below
+      val out = fm.createAtomic(p, overwriteIfPossible = false)
+      try {
+        out.write(s"$StateVersion\n".getBytes("UTF-8"))
+        out.close()
+      } catch {
+        case _: FileAlreadyExistsException => ()
+        case e: Throwable => out.cancel(); throw e
       }
     }
+    val in = fm.open(p)
+    val found =
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+      finally in.close()
+    require(found == StateVersion.toString,
+      s"checkpoint $dir was written with state version $found, this build " +
+        s"uses $StateVersion: start from a fresh checkpointLocation (a " +
+        "resync rebuilds downstream state) or run the matching build")
   }
 
   private[pipeline] def applyStateStoreConf(spark: SparkSession, config: Config): Unit =
@@ -227,6 +215,7 @@ object SyncPipeline {
       sink: RestSink,
       config: Config = Config())(implicit spark: SparkSession): StreamingQuery = {
     applyStateStoreConf(spark, config)
+    LocalCheckpointFileManager.install(spark)
     val source =
       if (config.keepAliveTick) events.union(keepAliveTicks(spark))
         .filter((r: ResourceEventRow) => r.event_type != KeepAliveType)

@@ -60,7 +60,8 @@ object VectorSync {
       events: Dataset[VecEvent],
       store: VectorStore,
       checkpointDir: String,
-      triggerMs: Long = 100)(implicit spark: SparkSession): StreamingQuery =
+      triggerMs: Long = 100)(implicit spark: SparkSession): StreamingQuery = {
+    LocalCheckpointFileManager.install(spark)
     // deliberately driver-side (unlike SyncPipeline's executorSideSink
     // option): exactly-once here hangs on applyEpoch being one atomic,
     // epoch-keyed store transaction — per-partition application would need
@@ -77,4 +78,5 @@ object VectorSync {
         ()
       }
       .start()
+  }
 }

@@ -348,6 +348,7 @@ object WalkServe {
     // returns; stream threads are separate by construction).
     val qidRef = new java.util.concurrent.atomic.AtomicReference[String]
     var identityChecked = false
+    LocalCheckpointFileManager.install(spark)
     val query = try { queries.writeStream
       .trigger(Trigger.ProcessingTime(triggerMs))
       .option("checkpointLocation", checkpointDir)

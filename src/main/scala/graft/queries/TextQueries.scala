@@ -188,7 +188,7 @@ object TextQueries {
       "q_scale_cpu",
       (s, dir) => {
         // CORE-SCALING PROBE (VERDICT r18 item 2): a HIGH-RESOLUTION
-        // 64-seed MinHash signature over every document, digested to a
+        // 160-seed MinHash signature over every document, digested to a
         // bounded per-hex-bucket summary. Every other catalog row at bench
         // SF is fixed-overhead-bound (110 of 130 under 0.5 s; the driver's
         // 8↔32-core ratios all read ≈1 and `suspect_cpus_ignored` fired),
@@ -202,8 +202,8 @@ object TextQueries {
         // signature, so the bench's `count()` action cannot column-prune
         // the kernel away (it can and does prune pure output projections
         // elsewhere — guide §1.4). The signature is ONE native-kernel
-        // expression (minhash_sig), so consuming 3 of its 64 elements
-        // still computes all 64; the DuckDB oracle only recomputes the 3
+        // expression (minhash_sig), so consuming 3 of its 160 elements
+        // still computes all 160; the DuckDB oracle only recomputes the 3
         // the RESULT depends on — same values, exact hash match.
         // 160 seeds is the probe's resolution dial: the RESULT consumes
         // elements 1/32/64 only (so the oracle recomputes exactly those
