@@ -35,6 +35,13 @@ import org.apache.spark.sql.DataFrame
   *     bytes/128 MB splits and passes through;
   *   - RDD-backed frames (localCheckpoint — the KnnGraphBuild/serve-fixture
   *     inputs): the RDD's actual partition count, already materialized;
+  *   - DataSource V2 scans: the same split arithmetic over the scan's
+  *     reported `sizeInBytes`; a scan that reports no size (Spark then
+  *     answers `spark.sql.defaultSizeInBytes`) passes through — an
+  *     unknown width must never be coalesced. A bare `DataSourceV2Relation`
+  *     does not reach the optimized plan (V2ScanRelationPushDown, a rule
+  *     that cannot be excluded, turns every batch one into a scan
+  *     relation); should one appear, it passes through unsized;
   *   - Range: its declared slice count;
   *   - driver-local rows (LocalRelation) and unknown leaves: width 1 —
   *     matching the unconditional pre-r19 behavior for micro-batch frames.
@@ -48,20 +55,28 @@ object Spread {
   private[graft] def estimatedPartitions(df: DataFrame): BigInt = {
     import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.sql.execution.datasources.LogicalRelation
+    import org.apache.spark.sql.execution.datasources.v2.{
+      DataSourceV2Relation, DataSourceV2ScanRelation}
     import org.apache.spark.sql.catalyst.plans.logical.Range
     val conf = df.sparkSession.sessionState.conf
     val dp = df.sparkSession.sparkContext.defaultParallelism
+    def splits(bytes: BigInt): BigInt = {
+      val minParts = BigInt(math.max(conf.filesMinPartitionNum.getOrElse(dp), 1))
+      val maxSplit = (bytes / minParts)
+        .max(BigInt(conf.filesOpenCostInBytes))
+        .min(BigInt(conf.filesMaxPartitionBytes))
+        .max(BigInt(1))
+      ((bytes + maxSplit - 1) / maxSplit).max(BigInt(1))
+    }
+    def v2(bytes: BigInt): BigInt =
+      if (bytes >= conf.defaultSizeInBytes) BigInt(Long.MaxValue) // unknown
+      else splits(bytes)
     df.queryExecution.optimizedPlan.collectLeaves().map {
       case r: LogicalRDD => BigInt(r.rdd.getNumPartitions)
       case r: Range => BigInt(r.numSlices.getOrElse(dp))
-      case rel: LogicalRelation =>
-        val bytes = BigInt(rel.relation.sizeInBytes)
-        val minParts = BigInt(math.max(conf.filesMinPartitionNum.getOrElse(dp), 1))
-        val maxSplit = (bytes / minParts)
-          .max(BigInt(conf.filesOpenCostInBytes))
-          .min(BigInt(conf.filesMaxPartitionBytes))
-          .max(BigInt(1))
-        ((bytes + maxSplit - 1) / maxSplit).max(BigInt(1))
+      case rel: LogicalRelation => splits(BigInt(rel.relation.sizeInBytes))
+      case r: DataSourceV2ScanRelation => v2(r.computeStats().sizeInBytes)
+      case _: DataSourceV2Relation => BigInt(Long.MaxValue) // unknown
       case _ => BigInt(1)
     }.sum.max(BigInt(1))
   }

@@ -106,10 +106,13 @@ object IndexSync {
       Metrics.global.inc("graft_indexsync_skipped_epochs_total")
       return (0L, 0L)
     }
-    if (events.isEmpty) return (0L, 0L)
     // last state wins inside the epoch (A13): one surviving verb per key —
     // an executor-side max_by aggregate, churn-sized, pinned once for the
-    // multi-action application below
+    // multi-action application below. This pin is the batch's ONLY scan:
+    // every action on a foreachBatch frame re-runs its source scan, and
+    // Spark adds each re-run's rows to the progress's numInputRows, so an
+    // emptiness probe ahead of it would re-read the batch and over-report
+    // the rows consumed (emptiness comes from the histogram below)
     val last = events.toDF()
       .groupBy("vec_id")
       .agg(max_by(
@@ -123,6 +126,7 @@ object IndexSync {
     // the ONLY driver-side view of the batch: the 2-row verb histogram
     val counts = last.groupBy((col("event_type") === "DELETE").as("is_del"))
       .count().collect().map(r => r.getBoolean(0) -> r.getLong(1)).toMap
+    if (counts.isEmpty) return (0L, 0L)
     val (nUp, nDel) = (counts.getOrElse(false, 0L), counts.getOrElse(true, 0L))
     if (layoutTodo) {
       IndexedLayout.applyDelta(spark, upDf, delDf, layoutDir)

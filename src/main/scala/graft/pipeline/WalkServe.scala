@@ -377,18 +377,23 @@ object WalkServe {
             old.close()
             Metrics.global.inc("graft_walkserve_reopens_total")
           }
+          val answerStart = System.nanoTime()
           answer(handleRef.get(), rows).foreach { case (answered, served) =>
             val dir = batchDir(outDir, epochId)
+            // a batch's answers are query-bounded: one file per batch dir
             answered
               .withColumn("batch",
                 org.apache.spark.sql.functions.lit(epochId))
-              .write.mode("overwrite").parquet(dir)
+              .coalesce(1).write.mode("overwrite").parquet(dir)
             // marker AFTER the data: a concurrent results()/fold() listing
             // mid-write (or mid-replay-overwrite) skips the uncommitted
             // dir instead of reading partial rows
             fsOf(spark, dir).create(
               new org.apache.hadoop.fs.Path(dir, CommitMarker), true).close()
             Metrics.global.inc("graft_walkserve_batches_total")
+            // with batches_total: mean answer-and-commit time per batch
+            Metrics.global.inc("graft_walkserve_answer_ms_total",
+              (System.nanoTime() - answerStart) / 1000000L)
             Metrics.global.inc("graft_walkserve_queries_total", served)
             if (foldEvery > 0) {
               if (loopLive < 0) { // once per (re)start: recover from disk
@@ -641,11 +646,13 @@ object WalkServe {
     * counts committed dirs above the fold watermark (what [[results]]
     * unions beside the folded store); the counters are process-global
     * across every loop in this JVM (the [[Metrics]] registry contract).
+    * `answerMs` sums each committed batch's answer-and-commit wall time,
+    * so `answerMs / batches` is the mean batch time.
     */
   final case class ServeLoopStats(foldEpoch: Int, foldedThrough: Long,
       liveBatchDirs: Int, batches: Long, queries: Long, reopens: Long,
       folds: Long, unknownTenants: Long = 0L, qidCollisions: Long = 0L,
-      tenantReloads: Long = 0L, retainedRows: Long = 0L)
+      tenantReloads: Long = 0L, retainedRows: Long = 0L, answerMs: Long = 0L)
 
   def describe(spark: SparkSession, outDir: String): ServeLoopStats = {
     val (fEpoch, through) = foldState(spark, outDir)
@@ -658,6 +665,7 @@ object WalkServe {
       Metrics.global.value("graft_walkserve_unknown_tenant_total"),
       Metrics.global.value("graft_walkserve_qid_collision_batches_total"),
       Metrics.global.value("graft_walkserve_tenant_reloads_total"),
-      Metrics.global.value("graft_walkserve_retained_rows_total"))
+      Metrics.global.value("graft_walkserve_retained_rows_total"),
+      Metrics.global.value("graft_walkserve_answer_ms_total"))
   }
 }

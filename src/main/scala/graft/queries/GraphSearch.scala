@@ -2,8 +2,10 @@ package graft.queries
 
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** GRAPH-TRAVERSAL ANN search — the HNSW/DiskANN-family serving path over
   * the engine's persisted k-NN graph ([[KnnGraphBuild]]): queries walk
@@ -28,17 +30,17 @@ import org.apache.spark.sql.functions._
   * This is the third search regime beside the brute broadcast scan
   * (q_sim_topk) and the IVF pruned scan (prunedTopK).
   *
-  * The walk is the standard greedy beam search, batched across queries
-  * as dataframe rounds (the Pregel shape again): the current beam joins
-  * the adjacency on the vertex key, NEW candidates (anti-join against
-  * the already-scored set) get scored against their query, and the
-  * top-`beam` survivors per query form the next frontier. Scores are
-  * computed ONCE per (query, vertex) — the scored set is carried, never
-  * recomputed. Entry points default to the `entrySeeds` lowest vec_ids
-  * (deterministic, but GEOMETRY-FREE: on a clustered corpus where id
-  * order correlates with content locality — at 100 TB the lowest ids are
-  * one ingest shard — they can all land in one cluster, and a walk can
-  * only find vertices connected to its seeds); pass [[centroidSeeds]] to
+  * The walk is the standard greedy beam search, batched across queries:
+  * each round the current beam joins the adjacency on the vertex key in
+  * one Spark job, the candidates get scored against their query, and
+  * the driver keeps the top-`beam` survivors per query as the next
+  * frontier. A (query, vertex) score is kept ONCE — the driver's scored
+  * set is carried across rounds, never recomputed. Entry points default
+  * to the `entrySeeds` lowest vec_ids (deterministic, but
+  * GEOMETRY-FREE: on a clustered corpus where id order correlates with
+  * content locality — at 100 TB the lowest ids are one ingest shard —
+  * they can all land in one cluster, and a walk can only find vertices
+  * connected to its seeds); pass [[centroidSeeds]] to
   * spread the entries by the quantizer's own geometry instead, one seed
   * per centroid (the kmeansCentroids seeding lesson applied to serving).
   * The graph is made UNDIRECTED for navigability
@@ -119,74 +121,107 @@ object GraphSearch {
     val seedFrame =
       if (seeds != null) seeds.select("vec_id")
       else e.orderBy("vec_id").limit(entrySeeds).select("vec_id")
-    def neighbors(frontier: DataFrame): DataFrame =
-      // the beam-bounded frontier broadcasts into the adjacency scan
-      broadcast(frontier.select("q_id", "vec_id"))
-        .join(adj, col("vec_id") === col("src"))
+    def neighbors(frontier: Seq[(Long, Long)]): DataFrame = {
+      import spark.implicits._
+      // the beam-bounded driver frontier broadcasts into the adjacency
+      // scan; repeated candidates dedup on the driver (see walk)
+      broadcast(frontier.toDF("q_id", "src")).join(adj, "src")
         .select(col("q_id"), col("dst").as("vec_id"))
-        .distinct()
+    }
     walk(score(q.select("q_id").crossJoin(seedFrame)),
       neighbors, score, beamN, itersN, k)
   }
 
   /** The beam-walk round structure, shared by the frame-based
     * [[beamTopK]] and the index-regime [[GraphServing.Handle.topK]] — one
-    * copy of the frontier/anti-join/truncation logic, so the two serving
+    * copy of the frontier/dedup/truncation logic, so the two serving
     * forms cannot drift. `seedScored` is the round-0 (q_id, vec_id,
-    * cos_r) frame; `neighbors` expands a frontier to its (q_id, vec_id)
-    * out-edges (distinct); `score` scores a (q_id, vec_id) candidate
-    * frame. Scores are computed ONCE per (query, vertex): the carried
-    * `scoredAll` checkpoint is the dedup authority, one materialization
-    * per round. Ranking keys are (round-6 cos desc, vec_id) everywhere,
-    * so the walk is deterministic across runs and partitionings.
+    * cos_r) frame; `neighbors` expands the frontier's (q_id, vec_id)
+    * rows to their out-edge candidates; `score` scores a candidate frame
+    * to (q_id, vec_id, cos_r).
+    *
+    * The walk state lives on the DRIVER, like the in-memory candidate
+    * list of a DiskANN searcher (Subramanya et al., NeurIPS 2019): it is
+    * queries × beam × degree × rounds-bounded. The scored map q_id →
+    * (vec_id → cos_r) is the dedup authority: a pair collected again in
+    * a later round is dropped, and duplicates within one round (one per
+    * frontier vertex naming the candidate, or a q_id carried twice in
+    * the batch) keep the max cos_r. Each round's frontier (the beam) is
+    * the top `beamN` of a query's scored map under [[rankOrder]]. Only
+    * the adjacency read and the scoring run in Spark: one collected job
+    * per round.
     *
     * `resultFilter` (the filtered-walk hook, [[GraphServing.Handle]]'s
-    * allowlist form) restricts RESULT SELECTION only: it is applied to
-    * the full scored set before the final ranking, so a sparse predicate
-    * still fills k from everything the walk scored — while EXPANSION
-    * stays unfiltered (filtered-out vertices remain navigable
-    * connectivity; filtering them out of the walk itself craters recall,
-    * filtered-DiskANN's lesson). `None` ranks the final frontier — the
-    * pre-existing unfiltered plan, byte-identical.
+    * allowlist form) restricts RESULT SELECTION only: it receives the
+    * full scored set as a local relation, so a sparse predicate still
+    * fills k from everything the walk scored — while EXPANSION stays
+    * unfiltered (filtered-out vertices remain navigable connectivity;
+    * filtering them out of the walk itself craters recall,
+    * filtered-DiskANN's lesson). `None` ranks the final beam.
+    *
+    * The result is a local relation in (q_id, rnk) order, self-matches
+    * excluded, with `cos` = [[graft.Canon.r4]] applied as a Column — bit
+    * for bit what a Spark-side ranking of the same scores reports.
     */
   private[queries] def walk(seedScored: DataFrame,
-      neighbors: DataFrame => DataFrame, score: DataFrame => DataFrame,
-      beamN: Int, itersN: Int, k: Int,
+      neighbors: Seq[(Long, Long)] => DataFrame,
+      score: DataFrame => DataFrame, beamN: Int, itersN: Int, k: Int,
       resultFilter: Option[DataFrame => DataFrame] = None): DataFrame = {
-    val wBeam = Window.partitionBy("q_id")
-      .orderBy(col("cos_r").desc, col("vec_id").asc)
-    def topBeam(scored: DataFrame): DataFrame = scored
-      .withColumn("__r", row_number().over(wBeam))
-      .filter(col("__r") <= beamN).drop("__r")
-    var scoredAll = seedScored
-      .localCheckpoint() // every (q, v) ever scored — dedup authority
-    // the frontier stays LAZY over the checkpointed score set: one
-    // materialization per round (the growing scoredAll), not two — the
-    // beam window re-derives inside the round's own job
-    var frontier = topBeam(scoredAll)
-    for (_ <- 1 to itersN) {
-      // the scored set is queries × beam × degree × rounds-bounded (the
-      // broadcast-small query contract times polylog walk factors), so
-      // it BROADCASTS into the anti-join — the candidate side, which in
-      // the serving form carries collocated vectors, never shuffles
-      val fresh = neighbors(frontier)
-        .join(broadcast(scoredAll.select("q_id", "vec_id")),
-          Seq("q_id", "vec_id"), "left_anti") // score once per (q, v)
-      scoredAll = scoredAll.unionByName(score(fresh)).localCheckpoint()
-      frontier = topBeam(scoredAll)
+    val spark = seedScored.sparkSession
+    import spark.implicits._
+    type Scores = mutable.HashMap[Long, java.lang.Double] // vec_id → cos_r
+    val scored = mutable.HashMap.empty[Long, Scores]
+    def absorb(round: DataFrame): Unit = {
+      val fresh = round.select("q_id", "vec_id", "cos_r")
+        .as[(Long, Long, java.lang.Double)].collect()
+        .filterNot { case (q, v, _) => scored.get(q).exists(_.contains(v)) }
+      fresh.foreach { case (q, v, c) =>
+        val m = scored.getOrElseUpdate(q, new Scores)
+        if (m.get(v).forall(o => rankOrder.gt((v, o), (v, c)))) m(v) = c
+      }
     }
-    val pool = resultFilter match {
-      case None => frontier // the beam — the unfiltered form's plan
-      case Some(f) => f(scoredAll) // full scored set ∩ predicate: the
-      // k results must come from everything scored, not the k-bounded
-      // beam, or a sparse allowlist silently under-fills k
+    def beam(m: Scores): Seq[Scored] = m.toSeq.sorted(rankOrder).take(beamN)
+    absorb(seedScored)
+    for (_ <- 1 to itersN)
+      absorb(score(neighbors(scored.toSeq.sortBy(_._1)
+        .flatMap { case (q, m) => beam(m).map(c => (q, c._1)) })))
+    val pool: Iterable[(Long, Seq[Scored])] = resultFilter match {
+      case None => scored.map { case (q, m) => q -> beam(m) }
+      case Some(f) => // full scored set ∩ predicate: the k results must
+        // come from everything scored, not the k-bounded beam, or a sparse
+        // allowlist silently under-fills k
+        f(scored.toSeq.flatMap { case (q, m) => m.map(p => (q, p._1, p._2)) }
+            .toDF("q_id", "vec_id", "cos_r"))
+          .select("q_id", "vec_id", "cos_r")
+          .as[(Long, Long, java.lang.Double)].collect().toSeq
+          .groupMap(_._1)(r => (r._2, r._3))
+          .map { case (q, cs) => q -> cs.sorted(rankOrder) }
     }
-    pool.filter(col("q_id") =!= col("vec_id"))
-      .withColumn("rnk", row_number().over(wBeam))
-      .filter(col("rnk") <= k)
+    pool.toSeq.sortBy(_._1)
+      .flatMap { case (q, cands) =>
+        cands.filter(_._1 != q).take(k).zipWithIndex
+          .map { case ((v, c), i) => (q, i + 1, v, c) }
+      }
+      .toDF("q_id", "rnk", "vec_id", "cos_r")
       .select(col("q_id"), col("rnk"), col("vec_id"),
         graft.Canon.r4(col("cos_r")).as("cos"))
-      .orderBy("q_id", "rnk")
+  }
+
+  /** A scored candidate on the driver: (vec_id, cos_r), SQL null as null. */
+  private type Scored = (Long, java.lang.Double)
+
+  /** The Spark window keys `(cos_r desc, vec_id asc)` on the driver: NaN
+    * above every number and -0.0 = 0.0 (`SQLOrderingUtil.compareDoubles`,
+    * Spark's own double ordering), nulls last, then vec_id ascending.
+    */
+  private val rankOrder: Ordering[Scored] = (a, b) => {
+    val byCos = (a._2, b._2) match {
+      case (null, null) => 0
+      case (null, _) => 1
+      case (_, null) => -1
+      case (x, y) => SQLOrderingUtil.compareDoubles(y, x)
+    }
+    if (byCos != 0) byCos else java.lang.Long.compare(a._1, b._1)
   }
 
   /** The persisted-graph form: search [[KnnGraphBuild]] state on disk —

@@ -669,10 +669,10 @@ object GraphServing {
     * past the corpus sizes that force the disk tier), and rounds scan
     * memory with no file I/O at all. `pin = false` (default) is the
     * disk tier — the DiskANN shape: rounds read the frontier's buckets
-    * from the pack, pruned at planning time when the frontier is small
-    * enough for pruning to bite (see [[Handle.topK]]). Either tier
-    * resolves the base+shard merge at open; a shard-refreshed pack and
-    * a folded one serve through the same Handle code.
+    * from the pack, pruned at planning time to the frontier's buckets
+    * (see [[Handle.topK]]). Either tier resolves the base+shard merge at
+    * open; a shard-refreshed pack and a folded one serve through the
+    * same Handle code.
     */
   def open(spark: SparkSession, outDir: String, pin: Boolean = false): Handle = {
     val m = readMeta(spark, outDir)
@@ -791,60 +791,43 @@ object GraphServing {
 
     /** The frontier's out-edges — candidates WITH their collocated
       * vectors — read through the bucket-pruned adjacency. The frontier
-      * is COLLECTED once per round (≤ queries × beam (q_id, vec_id)
+      * arrives as the walk's DRIVER rows (≤ queries × beam (q_id, vec_id)
       * pairs — both factors bounded by contract: the query batch is
-      * broadcast-small, beam is O(log n); the probeCells idiom one rung
-      * up): one job materializes it, the bucket list derives driver-side
-      * ([[bucketOfIdDriver]] at the pack's pinned fan-out) so the
-      * partition filter reaches the scan at PLANNING time with no second
-      * job, and the collected rows re-enter as a local relation for the
-      * broadcast join. One pruned scan per round is the whole round's
-      * I/O. Exposed for the pruning spec (numFiles-asserted there; the
-      * serving plan hides scan metrics behind the walk's checkpoints).
+      * broadcast-small, beam is O(log n)), so the bucket list derives
+      * driver-side ([[bucketOfIdDriver]] at the pack's pinned fan-out)
+      * and the partition filter reaches the scan at PLANNING time, and
+      * the src → q_ids map rides the scan's own task closure: each
+      * adjacency row explodes to the queries whose frontier holds its
+      * src. No join, so no broadcast job: one pruned scan per round is
+      * the whole round's I/O and its only job. The pinned RAM tier runs
+      * the same filter as a row predicate over memory (measured on 4
+      * cores, a 300-vector pack: a pinned 135-query topK takes 6 jobs and
+      * ≈ 1.0 s, the disk tier 6 jobs and ≈ 1.2 s). Exposed for the
+      * pruning spec (numFiles-asserted there).
       */
-    private[queries] def prunedAdj(frontier: DataFrame): DataFrame = {
-      import spark.implicits._
-      val f = frontier.select("q_id", "vec_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      if (f.isEmpty)
-        adj.limit(0).select(lit(0L).as("q_id"), col("dst").as("vec_id"),
+    private[queries] def prunedAdj(frontier: Seq[(Long, Long)]): DataFrame = {
+      val bs = frontier.map(p => bucketOfIdDriver(p._2, meta.buckets))
+        .distinct.sorted
+      val queriesAt = frontier.groupMap(_._2)(_._1)
+      val qs = udf((src: Long) => queriesAt.getOrElse(src, Nil))
+      adj.filter(col("bucket").isin(bs.map(b => b: Any): _*))
+        .select(explode(qs(col("src"))).as("q_id"), col("dst").as("vec_id"),
           col("embedding"), col("nrm"))
-      else {
-        val bs = f.map(p => bucketOfIdDriver(p._2, meta.buckets))
-          .distinct.sorted
-        val fLocal = f.toSeq.toDF("q_id", "src")
-        adj.filter(col("bucket").isin(bs.map(b => b: Any): _*))
-          .join(broadcast(fLocal), "src")
-          .select(col("q_id"), col("dst").as("vec_id"),
-            col("embedding"), col("nrm"))
-        // duplicates (one per frontier vertex naming the candidate) ride
-        // through scoring and dedup THERE — see topK's score
-      }
+      // duplicates (one per frontier vertex naming the candidate) are
+      // scored and dedup on the driver — see GraphSearch.walk
     }
-
-    /** The lazy (non-collecting) round read: the frontier broadcasts
-      * into the adjacency with NO driver materialization — the shape for
-      * a frontier that would cover (nearly) every bucket anyway, where a
-      * pruning collect would pay a job to discover it prunes nothing,
-      * and for the pinned RAM tier, where there is no file I/O to prune.
-      */
-    private def lazyAdj(frontier: DataFrame): DataFrame =
-      broadcast(frontier.select(col("q_id"), col("vec_id").as("src")))
-        .join(adj, "src")
-        .select(col("q_id"), col("dst").as("vec_id"),
-          col("embedding"), col("nrm"))
 
     /** Beam-search top-`k` — [[GraphSearch.beamTopK]]'s walk (the shared
       * [[GraphSearch.walk]] core, so results are row-identical to the
       * frame-based form under the pack's seeds and parameters), with
       * scoring fed entirely from the collocated vectors and each round's
-      * one read bucket-pruned WHEN PRUNING CAN BITE: a frontier of
-      * queries × beam ids covers ~every bucket once it exceeds a few
-      * multiples of the pack's fan-out, so the pruning collect runs only
-      * below that bound (a production pack sets the fan-out O(corpus
-      * partitions), putting realistic query batches under it; the
-      * fixture's 16 keeps single-query batches pruned). `beam`/`iters`
-      * default to the pack's pinned measured operating point.
+      * one read bucket-pruned to the frontier's buckets ([[prunedAdj]] —
+      * a production pack sets the fan-out O(corpus partitions), so a
+      * realistic batch's frontier touches a fraction of them). The walk
+      * state stays on the driver: a batch costs the seed scoring plus
+      * one adjacency-read-and-score job per round, whatever its size.
+      * `beam`/`iters` default to the pack's pinned measured operating
+      * point.
       */
     def topK(queries: DataFrame, k: Int, beam: Int = -1,
         iters: Int = -1): DataFrame =
@@ -973,10 +956,9 @@ object GraphServing {
     private def walkTopK(queries: DataFrame, k: Int, beam: Int,
         iters: Int, allowedIds: Option[DataFrame]): DataFrame = {
       // the query batch is broadcast-small by contract — COLLECT it once:
-      // nQ, the prune decision, and the broadcast side all derive from
-      // the local rows, so a serving call pays no per-call count job and
-      // no per-round re-scan of the caller's query lineage (the r15 form
-      // ran queries.count() before every batch)
+      // the walk scores against these local rows, so a serving call pays
+      // no per-call count job and no per-round re-scan of the caller's
+      // query lineage (the r15 form ran queries.count() before every batch)
       // casts keep the collected path as type-tolerant as the r15
       // column-expression path was (an int q_id or double embedding
       // worked there; getLong/getSeq[Float] alone would throw here)
@@ -1008,37 +990,36 @@ object GraphServing {
     }
 
     /** One copy of the round mechanics behind every topK form —
-      * single-allowlist, multi-tenant, and unfiltered all feed the same
-      * scored-seed/prune/score/walk pipeline, so they cannot drift.
+      * single-allowlist, multi-tenant, and unfiltered all score the seeds,
+      * then hand [[prunedAdj]] and the same `score` to the driver-held
+      * [[GraphSearch.walk]], so they cannot drift.
       */
     private def walkCore(qRows: Array[(Long, Seq[Float])], k: Int,
         beam: Int, iters: Int, widen: Int,
         resultFilter: Option[DataFrame => DataFrame]): DataFrame = {
-      import spark.implicits._
-      val nQ = qRows.length
       val beamN = if (beam > 0) beam else meta.beam * widen
       val itersN = if (iters >= 0) iters else meta.iters
-      val q = broadcast(qRows.toSeq.toDF("q_id", "q_emb")
-        .select(col("q_id"), col("q_emb"), l2Norm(col("q_emb")).as("q_n")))
-      val prune = !pinned && nQ.toLong * beamN <= 4L * meta.buckets
-      // candidates arrive as (q_id, vec_id, embedding, nrm) — scoring is
-      // a broadcast join against the query batch, no read. Duplicate
+      // the query batch rides each job's task closure, like the frontier
+      // in prunedAdj — a broadcast join would cost a job per round; a
+      // q_id carried twice scores under each of its embeddings
+      val embsOf = qRows.toSeq.groupMap(_._1)(_._2)
+      val qEmbs = udf((q: Long) => embsOf(q))
+      // candidates arrive as (q_id, vec_id, embedding, nrm). Duplicate
       // candidate rows (one per frontier vertex naming the neighbor) are
-      // SCORED redundantly and deduped after: the cosine is cheap codegen
-      // math, and a post-score max-aggregate dedups on three scalars —
-      // where a pre-score dropDuplicates would shuffle the collocated
-      // vector arrays (measured: the array shuffle dominated the round)
-      def score(cand: DataFrame): DataFrame = cand.join(q, "q_id")
-        .withColumn("cos_r", round(cosineWithNorms(
-          col("q_emb"), col("embedding"), col("q_n"), col("nrm")), 6))
-        .groupBy("q_id", "vec_id")
-        .agg(max("cos_r").as("cos_r")) // duplicates carry identical cos
-        .select("q_id", "vec_id", "cos_r")
+      // SCORED redundantly — the cosine is cheap codegen math — and the
+      // walk's driver map keeps one score per (q, v): a Spark-side dedup
+      // would shuffle per round, and a pre-score dropDuplicates would
+      // shuffle the collocated vector arrays
+      def score(cand: DataFrame): DataFrame = cand
+        .withColumn("q_emb", explode(qEmbs(col("q_id"))))
+        .select(col("q_id"), col("vec_id"), round(cosineWithNorms(
+          col("q_emb"), col("embedding"), l2Norm(col("q_emb")), col("nrm")),
+          6).as("cos_r"))
       // round 0: every query scores the pinned seed vectors — no reads
-      val seedScored = score(q.select("q_id").crossJoin(
-        seedVecs.select("vec_id", "embedding", "nrm")))
-      GraphSearch.walk(seedScored,
-        if (prune) prunedAdj else lazyAdj, score, beamN, itersN, k,
+      val seedScored = score(seedVecs.select(
+        explode(typedLit(embsOf.keys.toSeq.sorted)).as("q_id"),
+        col("vec_id"), col("embedding"), col("nrm")))
+      GraphSearch.walk(seedScored, prunedAdj, score, beamN, itersN, k,
         resultFilter)
     }
   }

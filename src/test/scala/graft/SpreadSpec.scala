@@ -83,4 +83,38 @@ class SpreadSpec extends SparkSpec {
     val joined = a.join(b, "id")
     assert(Spread.estimatedPartitions(joined) == BigInt(8))
   }
+
+  test("DataSource V2 scans: narrow widens, wide and size-unknown pass through") {
+    // parquet read through its V2 reader in this test only
+    val v1Key = "spark.sql.sources.useV1SourceList"
+    val prev = spark.conf.get(v1Key)
+    val knobs = Seq("spark.sql.files.maxPartitionBytes",
+      "spark.sql.files.openCostInBytes")
+    val prevKnobs = knobs.map(spark.conf.get)
+    try {
+      spark.conf.set(v1Key, prev.split(",").filterNot(_ == "parquet")
+        .mkString(","))
+      val docs = Tables.documents(spark, sf001)
+      val leaves = docs.queryExecution.optimizedPlan.collectLeaves()
+      assert(leaves.exists(_.isInstanceOf[org.apache.spark.sql.execution
+        .datasources.v2.DataSourceV2ScanRelation]), s"not a V2 scan: $leaves")
+      assert(Spread.estimatedPartitions(docs) == BigInt(1))
+      val spread = Spread.ifNarrow(docs, 8)
+      assert(spread.rdd.getNumPartitions == 8)
+      assert(spread.count() == docs.count())
+      // the simulated warehouse-wide scan: same arithmetic as the V1 case
+      knobs.foreach(spark.conf.set(_, "1024"))
+      val wide = Tables.documents(spark, sf001)
+      assert(Spread.estimatedPartitions(wide) > BigInt(4))
+      assert(Spread.ifNarrow(wide, 4) eq wide)
+    } finally {
+      spark.conf.set(v1Key, prev)
+      knobs.zip(prevKnobs).foreach { case (k, v) => spark.conf.set(k, v) }
+    }
+    // a V2 source that reports no statistics (the engine's own event-log
+    // reader) has an unknown width: it must pass through, never coalesce
+    val dir = java.nio.file.Files.createTempDirectory("spread_v2").toString
+    val events = spark.read.format("graft.sources.EventLogSource").load(dir)
+    assert(Spread.ifNarrow(events, 4) eq events)
+  }
 }

@@ -158,6 +158,40 @@ class IndexSyncSpec extends SparkSpec {
     assert(live.select("vec_id").distinct().count() == n)
   }
 
+  test("each micro-batch is scanned once: progress numInputRows counts every event once") {
+    // a foreachBatch frame re-runs its source scan per action, and Spark
+    // adds every re-run to numInputRows — a consumer that waits on that
+    // count (a drain "all events consumed") would stop the loop before
+    // its last batch if the apply read the batch twice
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    val layoutDir = tmp("isync_rows_layout")
+    val srcDir = tmp("isync_rows_src")
+    val ckpt = tmp("isync_rows_ckpt")
+    IndexedLayout.write(spark, emb, layoutDir, kCells = nc)
+    val vs = emb.orderBy("vec_id").limit(9).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+    val batches = 3
+    (1 to batches).foreach { b =>
+      writeEvents(srcDir, f"b$b%02d.json", vs.zipWithIndex.map {
+        case ((id, v), i) =>
+          VecEvent("UPDATE", b * 100L + i, id, v.map(_ * (1.0f + b)), 0)
+      }.toSeq)
+    }
+    val evs = {
+      implicit val enc: org.apache.spark.sql.Encoder[VecEvent] =
+        org.apache.spark.sql.Encoders.product[VecEvent]
+      spark.readStream.schema(enc.schema)
+        .option("maxFilesPerTrigger", "1").json(srcDir).as[VecEvent]
+    }
+    val q = IndexSync.start(evs, layoutDir, null, ckpt)
+    val rows = try {
+      q.processAllAvailable()
+      q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq
+    } finally q.stop()
+    assert(rows == Seq.fill(batches)(vs.length.toLong),
+      s"per-batch input rows $rows, written ${vs.length} per batch")
+  }
+
   test("an epoch that re-applies (lost marker) converges; a marked epoch is skipped") {
     val layoutDir = tmp("isync_replay_layout")
     val graphDir = tmp("isync_replay_graph")

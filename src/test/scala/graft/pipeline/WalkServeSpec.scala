@@ -574,6 +574,36 @@ class WalkServeSpec extends SparkSpec {
       "a fold or replay duplicated served rows")
   }
 
+  test("graft_walkserve_answer_ms_total sums each batch's answer-and-commit time; describe() and /metrics expose it") {
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val outDir = tmp("wserve_out_ms")
+    val ckpt = tmp("wserve_ckpt_ms")
+    val src = MemoryStream[(Long, Seq[Float])]
+    def batches = Metrics.global.value("graft_walkserve_batches_total")
+    def answerMs = Metrics.global.value("graft_walkserve_answer_ms_total")
+    val (b0, ms0) = (batches, answerMs)
+    val serving = WalkServe.start(src.toDS().toDF("q_id", "q_emb"),
+      packDir, outDir, ckpt, k = kk)
+    val t0 = System.nanoTime()
+    try {
+      qRows(3).foreach { q =>
+        src.addData(q); serving.query.processAllAvailable()
+      }
+    } finally serving.stop()
+    val wallMs = (System.nanoTime() - t0) / 1000000L
+    val spent = answerMs - ms0
+    info(s"3 batches: answer-and-commit $spent ms of $wallMs ms wall")
+    assert(batches - b0 == 3)
+    // every batch walks and writes a parquet dir, so each adds at least
+    // 1 ms; the sum is part of the loop's own wall time
+    assert(spent >= 3 && spent <= wallMs, s"$spent ms of $wallMs ms")
+    assert(WalkServe.describe(spark, outDir).answerMs == answerMs)
+    assert(Metrics.global.exposition.linesIterator
+      .contains(s"graft_walkserve_answer_ms_total $answerMs"))
+  }
+
   test("a REAL checkpoint replay (commit log truncated) re-executes the committed batch and rewrites its dir with no duplicates in results()") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
     // a FILE source, not MemoryStream: the source must be able to

@@ -239,7 +239,7 @@ class GraphServingRefreshSpec extends SparkSpec {
     // broadcast claim join down to each scan
     val id = emb.orderBy("vec_id").limit(1).head.getLong(0)
     val b = GraphServing.bucketOfIdDriver(id, m.buckets)
-    val pruned = h.prunedAdj(Seq((0L, id)).toDF("q_id", "vec_id"))
+    val pruned = h.prunedAdj(Seq((0L, id)))
     pruned.collect()
     def scans(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => scans(a.executedPlan)

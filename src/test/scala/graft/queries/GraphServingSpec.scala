@@ -93,9 +93,7 @@ class GraphServingSpec extends SparkSpec {
     // pick frontier ids that all hash into ONE bucket
     val byBucket = idBuckets.groupBy(_.getInt(1))
     val (b, ids) = byBucket.toSeq.minBy(_._1)
-    import spark.implicits._
     val frontier = ids.take(2).map(r => (0L, r.getLong(0))).toSeq
-      .toDF("q_id", "vec_id")
     val pruned = h.prunedAdj(frontier)
     pruned.collect()
     val scan = scans(pruned.queryExecution.executedPlan)
