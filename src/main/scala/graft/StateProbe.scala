@@ -25,13 +25,16 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * Then: drain, and assert state residency lands exactly on keys − deletes
   * — deleted keys fully evict (tombstone expiry), live keys hold one row.
   *
-  * Runs the transformWithState debounce (mode `tws`, default): fMGWS finds
-  * expired ProcessingTime timeouts by scanning the whole store every batch —
-  * per-batch time linear in the key population, the exact failure mode a
-  * soak exists to expose. TWS registers expiry-indexed per-key timers, so
-  * timeout handling touches only keys that fire. Modes `fmgws` (scan-based
-  * path) and `heap` (fMGWS + HDFS-backed store) measure the alternatives on
-  * the same workload.
+  * Modes (the pipeline runs the transformWithState debounce exactly when the
+  * RocksDB store is on):
+  *   - `tws` (default): RocksDB + transformWithState + keep-alive tick. fMGWS
+  *     finds expired ProcessingTime timeouts by scanning the whole store
+  *     every batch — per-batch time linear in the key population, the exact
+  *     failure mode a soak exists to expose; TWS registers expiry-indexed
+  *     per-key timers, so timeout handling touches only keys that fire.
+  *   - `noka`: as `tws` without the keep-alive tick.
+  *   - `execsink`: as `tws` with the executor-side sink.
+  *   - `heap`: fMGWS on the HDFS-backed (heap) store.
   *
   * Writes STATE_PROBE.json (cwd) and prints the same single JSON line.
   */
@@ -66,6 +69,8 @@ object StateProbe {
   def main(args: Array[String]): Unit = {
     val keys = args.headOption.map(_.toInt).getOrElse(1000000)
     val mode = args.drop(1).headOption.getOrElse("tws")
+    require(Set("tws", "noka", "execsink", "heap").contains(mode),
+      s"unknown mode $mode: tws | noka | execsink | heap")
     val loadPerS = args.drop(2).headOption.map(_.toInt).getOrElse(5000)
     val soakMs = 60000L
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -114,7 +119,7 @@ object StateProbe {
     // the reference scenario: 10 s debounce holding upserts, trigger = the
     // delete-latency bound; RocksDB so the 10^6-key state never tests the
     // heap instead of the store; keep-alive so quiet-phase timers still fire
-    // mode execsink = the full 100 TB-shaped config: TWS timers + RocksDB
+    // mode execsink = the full 100 TB-shaped config: TWS timers on RocksDB
     // + per-partition payload delivery (Config.executorSideSink) — proves
     // the 10^6-key delete-latency bound on the config a large cluster
     // actually runs, not just the driver-sender one
@@ -122,7 +127,6 @@ object StateProbe {
       debounceMs = 10000, flushIntervalMs = 250, maxBatch = 500,
       checkpointDir = java.nio.file.Files.createTempDirectory("state_probe").toString,
       rocksDbState = mode != "heap", keepAliveTick = mode != "noka",
-      transformWithState = mode == "tws" || mode == "execsink",
       executorSideSink = mode == "execsink")
     val collector = new Collector
     spark.streams.addListener(collector)

@@ -2,15 +2,16 @@ package graft.pipeline
 
 import java.sql.Timestamp
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The CRD capabilities pipeline — the reference's second, name-keyed stream
-  * (watcher.go:41-44, crd_debounce.go; SURVEY.md A11): same
-  * debounce/dedup/delete-bypass semantics as the instance pipeline but keyed
-  * by fully-qualified CRD name, with two contract differences:
+  * (watcher.go:41-44, crd_debounce.go; SURVEY.md A11): the instance
+  * pipeline's [[Debounce]] keyed by fully-qualified CRD name, with two
+  * contract differences, both decided here:
   *
   *   - CRD UPDATE events are dropped at the router (watcher.go:240-243,
-  *     prds/done/5-crd-change-detection.md:175) — only ADD/DELETE flow.
+  *     prds/done/5-crd-change-detection.md:175) — only ADD/DELETE flow, so
+  *     the A10 no-op suppression never applies to this route.
   *   - Payloads carry bare name strings, not instance objects
   *     (crd_debounce.go:16-19): {"upserts":["<plural>.<group>"...]} /
   *     {"deletes":[...]}.
@@ -20,105 +21,22 @@ object CrdPipeline {
   final case class CrdEventRow(
       event_type: String, event_seq: Long, ts: Timestamp, crd_name: String)
 
-  final case class CrdAction(action: String, crd_name: String)
-
-  /** Per-name state, mirroring Debounce.Pending's three roles: a pending
-    * (not yet quiesced) upsert, a delete tombstone, or — after a flush —
-    * seq-only memory (`flushed = true`, no timer) so a cross-batch-
-    * reordered OLDER event cannot act after the flush (without it, a
-    * delayed DELETE seq=3 arriving after ADD seq=5 flushed would wrongly
-    * delete the capability). `deadlineMs` is the armed flush deadline, so
-    * a stale-only micro-batch restores the remaining window instead of
-    * re-extending it (debounce.go:139-147 resets only on accepted events).
-    *
-    * CHECKPOINT-SCHEMA CONTRACT: this shape is persisted in the state
-    * store, and Spark's state-schema check rejects a restart whose state
-    * class gained/lost/retyped fields. A checkpoint written before
-    * `flushed`/`deadlineMs` existed (the original 2-field shape) therefore
-    * fails on upgrade — DISCARD the CRD pipeline's checkpoint dir when
-    * upgrading across a Pending shape change. That is safe by design: CRD
-    * state is fully reconstructible from one resync pass (A19 re-lists
-    * everything, and the REST upsert contract is idempotent), so a
-    * discarded checkpoint costs one resync, never data loss. The shape is
-    * considered FROZEN from here; a future change must bump a new state
-    * class name + checkpoint dir rather than mutate this one in place.
+  /** The router: UPDATE dropped, the name as the debounce key
+    * (`id = name = crd_name`).
     */
-  final case class Pending(
-      seq: Long, tombstone: Boolean = false, flushed: Boolean = false,
-      deadlineMs: Long = 0L)
-
-  /** Same keyed-state shape as Debounce.stateFunc, over names: tombstones
-    * block cross-batch out-of-order resurrection and expire via timeout;
-    * flushed keys stay resident as seq memory (bounded by the CRD count,
-    * far below the instance pipeline's live-key bound).
-    */
-  def stateFunc(debounceMs: Long)(
-      name: String,
-      events: Iterator[CrdEventRow],
-      state: GroupState[Pending]): Iterator[CrdAction] = {
-    if (state.hasTimedOut) {
-      state.getOption match {
-        case Some(p) if !p.tombstone && !p.flushed =>
-          // quiesced upsert flushes; keep seq memory, no timer
-          state.update(Pending(p.seq, flushed = true))
-          Iterator(CrdAction(SyncAction.Upsert, name))
-        case _ =>
-          // tombstone expiry (or a stray timeout on flushed memory)
-          state.remove()
-          Iterator.empty
-      }
-    } else {
-      val prevDeadline = state.getOption
-        .filterNot(_.flushed).map(_.deadlineMs).filter(_ > 0)
-      var out = List.empty[CrdAction]
-      var applied = false
-      events.toSeq.sortBy(_.event_seq).foreach { e =>
-        if (state.getOption.forall(_.seq < e.event_seq)) {
-          if (e.event_type == "DELETE") {
-            applied = true
-            state.update(Pending(e.event_seq, tombstone = true))
-            out ::= CrdAction(SyncAction.Delete, name)
-          } else if (e.event_type == "ADD") {
-            applied = true
-            state.update(Pending(e.event_seq))
-          } // UPDATE dropped (watcher.go:240-243)
-        }
-      }
-      state.getOption match {
-        case Some(p) if !p.flushed =>
-          // invoking the function clears the timeout, so armed state must
-          // re-set one — but only ACCEPTED events move the deadline
-          val now = state.getCurrentProcessingTimeMs()
-          val deadline =
-            if (applied || prevDeadline.isEmpty) now + debounceMs
-            else prevDeadline.get
-          state.update(p.copy(deadlineMs = deadline))
-          state.setTimeoutDuration(math.max(1L, deadline - now))
-        case _ => () // flushed memory: resident, timerless
-      }
-      out.reverse.iterator
-    }
-  }
-
-  def debounced(events: Dataset[CrdEventRow], debounceMs: Long)(
-      implicit spark: SparkSession): Dataset[CrdAction] = {
-    import spark.implicits._
-    events
-      .filter(_.event_type != "UPDATE")
-      .groupByKey(_.crd_name)
-      .flatMapGroupsWithState(
-        OutputMode.Append(),
-        GroupStateTimeout.ProcessingTimeTimeout)(stateFunc(debounceMs))
-  }
+  private[pipeline] def routed(e: CrdEventRow): Option[ResourceEventRow] =
+    if (e.event_type == "UPDATE") None
+    else Some(ResourceEventRow(e.event_type, e.event_seq, e.ts, e.crd_name,
+      "", e.crd_name, "", "", "", null, null, null))
 
   /** Name payloads: deletes first (fast path), upserts chunked — same
     * split/chunk/escape contract as the instance pipeline (Payloads.build).
     */
-  def payloads(actions: Seq[CrdAction], maxBatch: Int = 50): Seq[String] = {
+  def payloads(actions: Seq[SyncAction], maxBatch: Int = 50): Seq[String] = {
     val (dels, ups) = actions.partition(_.action == SyncAction.Delete)
     Payloads.build(
-      dels.map(a => Payloads.jstr(a.crd_name)),
-      ups.map(a => Payloads.jstr(a.crd_name)),
+      dels.map(a => Payloads.jstr(a.id)),
+      ups.map(a => Payloads.jstr(a.id)),
       maxBatch)
   }
 
@@ -127,28 +45,8 @@ object CrdPipeline {
       sink: RestSink,
       config: SyncPipeline.Config = SyncPipeline.Config())(
       implicit spark: SparkSession): StreamingQuery = {
-    SyncPipeline.applyStateStoreConf(spark, config)
-    LocalCheckpointFileManager.install(spark)
-    val actions = debounced(events, config.debounceMs)
-    val maxBatch = config.maxBatch
-    val writer = actions.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(config.flushIntervalMs))
-      .foreachBatch { (batch: Dataset[CrdAction], _: Long) =>
-        if (config.executorSideSink)
-          // same per-partition sender tradeoff as SyncPipeline.start: no
-          // driver round-trip; per-name order preserved (one state partition)
-          batch.foreachPartition { (it: Iterator[CrdAction]) =>
-            Payloads.deliver(sink, payloads(it.toSeq, maxBatch))
-          }
-        else
-          Payloads.deliver(sink, payloads(batch.collect().toSeq, maxBatch))
-      }
-    val w =
-      if (config.checkpointDir.nonEmpty) {
-        SyncPipeline.stampStateVersion(spark, config.checkpointDir)
-        writer.option("checkpointLocation", config.checkpointDir)
-      } else writer
-    w.start()
+    import spark.implicits._
+    SyncPipeline.start(events.flatMap(routed), sink, config,
+      SyncPipeline.Route.Crds)
   }
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Per-key debounce with last-state-wins and delete fast-path — the
@@ -14,6 +14,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *   - A14 delete bypass + cancel: DELETE skips the debounce entirely (emitted
   *     in its own micro-batch, bounded by the trigger interval, matching the
   *     reference's <1 s assertion) and cancels any pending upsert for the key.
+  *
+  * Both routes run this one state machine: the instance stream keyed by id
+  * (debounce.go) and the CRD stream keyed by name after [[CrdPipeline]]'s
+  * router (crd_debounce.go).
   *
   * The reference needs a generation counter to guard timer races
   * (debounce.go:53-58); here the state store serializes per-key access, so the
@@ -60,10 +64,11 @@ object Debounce {
       // timer only on accepted events, debounce.go:139-147)
       deadlineMs: Long = 0L)
 
-  /** NOTE (state-schema compatibility): adding fields to Pending changes the
-    * flatMapGroupsWithState state encoder schema. Streaming checkpoints
-    * written by an older build fail schema validation on restart — upgrades
-    * must start from a fresh checkpointLocation (and rely on a resync for
+  /** NOTE (state compatibility): any change to Pending changes the persisted
+    * state (Kryo bytes on the flatMapGroupsWithState path, the ValueState
+    * schema on DebounceTws), so it bumps [[SyncPipeline.StateVersion]]:
+    * checkpoints written by an older build are refused at start — upgrades
+    * start from a fresh checkpointLocation (and rely on a resync for
     * convergence), as with the reference's stateless restarts.
     */
 
@@ -127,6 +132,19 @@ object Debounce {
       (next, if (noop) None else Some(SyncAction.upsert(p.row)))
     }
 
+  /** The flush deadline armed on `p`; flushed memory has none. */
+  def armedDeadline(p: Option[Pending]): Option[Long] =
+    p.filterNot(_.flushed).map(_.deadlineMs).filter(_ > 0)
+
+  /** The deadline armed state carries out of a batch: only ACCEPTED events
+    * (or state with nothing armed yet) start a fresh window; a stale-only
+    * batch keeps the remaining one (debounce.go:139-147 resets the timer
+    * on accepted events only).
+    */
+  def nextDeadline(applied: Boolean, prevDeadline: Option[Long], nowMs: Long,
+      debounceMs: Long): Long =
+    if (applied || prevDeadline.isEmpty) nowMs + debounceMs else prevDeadline.get
+
   /** GroupState wrapper: timeout fires after `debounceMs` of per-key quiet;
     * each new event re-arms it (timer reset, debounce.go:139-147).
     */
@@ -144,18 +162,14 @@ object Debounce {
       }
       emit.iterator
     } else {
-      val prevDeadline = state.getOption
-        .filter(p => !p.flushed).map(_.deadlineMs).filter(_ > 0)
+      val prevDeadline = armedDeadline(state.getOption)
       val (next, out, applied) = applyEvents(state.getOption, events.toSeq)
       next match {
         // invoking the function clears the key's timeout, so armed state must
-        // re-set one either way — but only ACCEPTED events move the deadline;
-        // a stale-only batch restores the remaining window (debounce.go:139-147)
+        // re-set one either way
         case Some(p) if !p.flushed =>
           val now = state.getCurrentProcessingTimeMs()
-          val deadline =
-            if (applied || prevDeadline.isEmpty) now + debounceMs
-            else prevDeadline.get
+          val deadline = nextDeadline(applied, prevDeadline, now, debounceMs)
           state.update(p.copy(deadlineMs = deadline))
           state.setTimeoutDuration(math.max(1L, deadline - now))
         case Some(p) => state.update(p)
@@ -166,15 +180,26 @@ object Debounce {
   }
 
   /** The streaming operator: keyed CDC stream → debounced SyncAction stream.
-    * The groupByKey(id) hash-partitions by key — the pipeline's one shuffle.
+    * Grouping on the `id` column hash-partitions by key — the pipeline's one
+    * shuffle — without deserializing every row to compute its key.
+    *
+    * The state is Kryo-encoded. Spark re-resolves a product state encoder
+    * every micro-batch, and the label/annotation maps inside [[Pending]]
+    * would get fresh lambda-variable names each time, so the state
+    * projection would miss the codegen cache and compile again on every
+    * trigger (measured: one janino compile per batch per query;
+    * DebounceStateEncoderSpec). Kryo state has no schema for Spark to check
+    * on restart, so [[SyncPipeline.StateVersion]] is the only guard: bump
+    * it with any change to [[Pending]].
     */
   def apply(events: Dataset[ResourceEventRow], debounceMs: Long)(
       implicit spark: SparkSession): Dataset[SyncAction] = {
     import spark.implicits._
     events
-      .groupByKey(_.id)
+      .groupBy("id").as[String, ResourceEventRow]
       .flatMapGroupsWithState(
         OutputMode.Append(),
-        GroupStateTimeout.ProcessingTimeTimeout)(stateFunc(debounceMs))
+        GroupStateTimeout.ProcessingTimeTimeout)(stateFunc(debounceMs))(
+        Encoders.kryo[Pending], newProductEncoder[SyncAction])
   }
 }

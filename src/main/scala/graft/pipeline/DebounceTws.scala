@@ -18,9 +18,11 @@ import org.apache.spark.sql.streaming._
   *   - State lives in named typed slots (`ValueState[Pending]`) with
   *     per-state-var schema evolution support, vs one opaque encoder blob.
   *
-  * Operationally `transformWithState` requires the RocksDB state store
-  * provider — [[SyncPipeline.start]] forces it for this path, which is the
-  * 100 TB design point anyway (state off-heap, bounded by live keys).
+  * `transformWithState` requires the RocksDB state store provider, so
+  * [[SyncPipeline.start]] runs this operator exactly when
+  * `Config.rocksDbState` is set (the 100 TB design point: state off-heap,
+  * bounded by live keys) — on RocksDB, the classic operator's per-batch
+  * timeout scan over the whole store is the slow shape at 10^6 keys.
   *
   * The processing-time caveat of the classic path still applies: timers fire
   * inside micro-batches, so a quiet source defers expiry until the next
@@ -48,14 +50,12 @@ object DebounceTws {
       val prev = if (pending.exists()) Some(pending.get()) else None
       // an armed (non-flushed) state always has its deadline registered as a
       // timer; flushed suppression-memory has none (event-driven residency)
-      val prevDeadline = prev.filterNot(_.flushed).map(_.deadlineMs).filter(_ > 0)
+      val prevDeadline = armedDeadline(prev)
       val (next, out, applied) = applyEvents(prev, rows.toSeq)
       next match {
         case Some(p) if !p.flushed =>
-          val now = timers.getCurrentProcessingTimeInMs()
-          val deadline =
-            if (applied || prevDeadline.isEmpty) now + debounceMs
-            else prevDeadline.get
+          val deadline = nextDeadline(applied, prevDeadline,
+            timers.getCurrentProcessingTimeInMs(), debounceMs)
           if (!prevDeadline.contains(deadline)) {
             // timer reset on accepted events (debounce.go:139-147): the
             // superseded registration is deleted, not left to fire stale

@@ -81,9 +81,10 @@ object GraftSync {
     val instanceQuery = SyncPipeline.start(
       watched.filter(cfg.watchFilter(mappedKind)), iSink, cfg)
 
-    // A21/A11: capabilities pipeline on its own name-keyed debounce —
-    // CRDs reach here through the force-union in effectiveWatchFilter even
-    // when the A2 lists would exclude them
+    // A21/A11: capabilities pipeline, the same debounce keyed by name in
+    // its own query (checkpoint `<dir>/crd`) — CRDs reach here through the
+    // force-union in effectiveWatchFilter even when the A2 lists would
+    // exclude them
     val crdQuery =
       if (!cfg.crdPipelineEnabled) None
       else {

@@ -44,7 +44,9 @@ object LexIndexSync {
       Metrics.global.inc("graft_lexsync_skipped_epochs_total")
       return (0L, 0L)
     }
-    if (events.isEmpty) return (0L, 0L)
+    // the pin below is the batch's only scan: an emptiness probe ahead of
+    // it would re-run the source scan and over-count the progress's
+    // numInputRows (as in IndexSync; emptiness comes from the histogram)
     val last = events.toDF()
       .groupBy("doc_id")
       .agg(max_by(struct(col("event_type"), col("text")),
@@ -57,6 +59,7 @@ object LexIndexSync {
     // the only driver-side view of the batch: the 2-row verb histogram
     val counts = last.groupBy((col("event_type") === "DELETE").as("is_del"))
       .count().collect().map(r => r.getBoolean(0) -> r.getLong(1)).toMap
+    if (counts.isEmpty) return (0L, 0L)
     val (nUp, nDel) = (counts.getOrElse(false, 0L), counts.getOrElse(true, 0L))
     // one atomic index epoch: tombstone every touched live id and land
     // the fresh texts under the same commit

@@ -38,8 +38,11 @@ object MatViewSync {
       Metrics.global.inc("graft_mvsync_skipped_epochs_total")
       return (0L, 0L)
     }
-    if (batch.isEmpty) return (0L, 0L)
-    val pinned = batch.localCheckpoint() // one materialization, three uses
+    // one materialization, three uses — and the batch's only scan: an
+    // emptiness probe ahead of it would re-run the source scan and
+    // over-count the progress's numInputRows (emptiness comes from the
+    // histogram below)
+    val pinned = batch.localCheckpoint()
     // bounded verb histogram (≤ |distinct ops| rows) doubles as the
     // validation gate: an op outside INSERT/DELETE (or NULL) must fail
     // LOUDLY here — the applyCdc filters downstream would silently drop
@@ -48,6 +51,7 @@ object MatViewSync {
     val counts = pinned.groupBy(upper(col(opCol)).as("op"))
       .count().collect()
       .map(r => Option(r.getString(0)).getOrElse("NULL") -> r.getLong(1)).toMap
+    if (counts.isEmpty) return (0L, 0L)
     val unknown = counts.keySet -- Set("INSERT", "DELETE")
     require(unknown.isEmpty,
       s"MatViewSync: unsupported op(s) ${unknown.mkString(", ")} in epoch " +

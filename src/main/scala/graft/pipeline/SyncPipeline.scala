@@ -25,8 +25,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * the checkpoint, but a recovered processing-time timer only fires when a
   * micro-batch executes, and the engine runs no batch until new data
   * arrives. A quiet source after restart therefore holds recovered upserts
-  * indefinitely — deployments should emit a periodic keep-alive event (or
-  * trigger a resync) after recovery. Covered by the A18 recovery test.
+  * until the key's route sees its next event. `Config.keepAliveTick` runs a
+  * batch every trigger on either route, so recovered timers fire on time.
+  * A resync does not replace it: it replays the instance snapshot straight
+  * to the instances sink, so it converges the instance receiver but never
+  * reaches a CRD upsert held in recovered state. Covered by the A18
+  * recovery and keep-alive tests.
+  *
+  * Both routes run through [[start]]: the instance stream as is, the CRD
+  * stream after [[CrdPipeline]]'s router, each with its own [[Route]].
   */
 object SyncPipeline {
 
@@ -37,7 +44,9 @@ object SyncPipeline {
       checkpointDir: String = "",
       // 100 TB design point: per-key debounce state spills to RocksDB instead
       // of the executor heap (the reference's pending map is unbounded
-      // in-memory, SURVEY.md §4). Session-wide conf; set before .start().
+      // in-memory, SURVEY.md §4), and the debounce runs on transformWithState
+      // (DebounceTws), which needs RocksDB. Session-wide conf; set before
+      // .start().
       rocksDbState: Boolean = false,
       // remaining A20 surface (config.go:44-57)
       instancesEndpoint: String = Config.DefaultInstancesEndpoint,
@@ -58,12 +67,6 @@ object SyncPipeline {
       // upserts forever (the class scaladoc recovery caveat). Off by default
       // for strict source parity.
       keepAliveTick: Boolean = false,
-      // run the debounce on Spark 4's transformWithState API (real per-key
-      // timers, named state slots — see DebounceTws) instead of the classic
-      // flatMapGroupsWithState path. Requires (and forces) the RocksDB
-      // state store. Same semantics either way — DebounceTwsSpec holds the
-      // two implementations to identical outputs.
-      transformWithState: Boolean = false,
       // tail the event log through the engine's own DSv2 source
       // (fileSourceV2) instead of the built-in json stream; same rows,
       // pruning/pushdown in the parser, file-count offsets
@@ -149,12 +152,15 @@ object SyncPipeline {
   }
 
   /** Frozen shape version of the per-key debounce state (COVERAGE.md pins
-    * [[Debounce.Pending]]'s shape as of round 7). Bump ONLY together with a
-    * migration story: a checkpoint written under a different version must
-    * fail fast below with an actionable message, not surface as Spark's
+    * [[Debounce.Pending]]'s shape). Version 2: the CRD route keeps
+    * [[Debounce.Pending]] too (version 1 had a CRD-only state class), the
+    * flatMapGroupsWithState path stores it Kryo-encoded, and `rocksDbState`
+    * runs the transformWithState operator. Bump ONLY together
+    * with a migration story: a checkpoint written under a different version
+    * must fail fast below with an actionable message, not surface as Spark's
     * opaque state-deserialization error mid-batch.
     */
-  val StateVersion: Int = 1
+  val StateVersion: Int = 2
 
   private val StateVersionFile = "_graft_state_version"
 
@@ -193,18 +199,33 @@ object SyncPipeline {
         "resync rebuilds downstream state) or run the matching build")
   }
 
-  private[pipeline] def applyStateStoreConf(spark: SparkSession, config: Config): Unit =
+  private def applyStateStoreConf(spark: SparkSession, config: Config): Unit =
     // config is authoritative either way — a one-way set would leak RocksDB
-    // into later pipelines started on the same session with the default.
-    // transformWithState only runs on RocksDB, so that path forces it.
+    // into later pipelines started on the same session with the default
     spark.conf.set(
       "spark.sql.streaming.stateStore.providerClass",
-      if (config.rocksDbState || config.transformWithState)
+      if (config.rocksDbState)
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
       else
         "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
 
-  /** Wire the pipeline onto any streaming Dataset of events. `send` is the
+  /** What differs between the instance and CRD routes after the debounce:
+    * how a micro-batch of actions becomes wire payloads, and which
+    * /metrics counters count its delivered upserts and deletes.
+    */
+  final case class Route(
+      upserts: String,
+      deletes: String,
+      payloads: (Seq[SyncAction], Int) => Seq[String])
+
+  object Route {
+    val Instances: Route =
+      Route("graft_upserts_total", "graft_deletes_total", Payloads.fromActions)
+    val Crds: Route =
+      Route("graft_crd_upserts_total", "graft_crd_deletes_total", CrdPipeline.payloads)
+  }
+
+  /** Wire the pipeline onto any streaming Dataset of events. `sink` is the
     * transport (real HTTP in prod, a recording stub in tests); it is invoked
     * on the driver per micro-batch — payload counts are small by contract
     * (batches of ≤ maxBatch rows), the heavy lifting (debounce state, key
@@ -213,7 +234,8 @@ object SyncPipeline {
   def start(
       events: Dataset[ResourceEventRow],
       sink: RestSink,
-      config: Config = Config())(implicit spark: SparkSession): StreamingQuery = {
+      config: Config = Config(),
+      route: Route = Route.Instances)(implicit spark: SparkSession): StreamingQuery = {
     applyStateStoreConf(spark, config)
     LocalCheckpointFileManager.install(spark)
     val source =
@@ -221,7 +243,7 @@ object SyncPipeline {
         .filter((r: ResourceEventRow) => r.event_type != KeepAliveType)
       else events
     val actions =
-      if (config.transformWithState) DebounceTws(source, config.debounceMs)
+      if (config.rocksDbState) DebounceTws(source, config.debounceMs)
       else Debounce(source, config.debounceMs)
     val maxBatch = config.maxBatch
     val writer = actions.writeStream
@@ -250,19 +272,19 @@ object SyncPipeline {
           import org.apache.spark.sql.Encoders
           val tallies = batch.mapPartitions { it =>
             val acts = it.toSeq
-            Payloads.deliver(sink, Payloads.fromActions(acts, maxBatch))
+            Payloads.deliver(sink, route.payloads(acts, maxBatch))
             Iterator.single((
               acts.count(_.action == SyncAction.Upsert).toLong,
               acts.count(_.action == SyncAction.Delete).toLong))
           }(Encoders.product[(Long, Long)]).collect()
-          Metrics.global.inc("graft_upserts_total", tallies.map(_._1).sum)
-          Metrics.global.inc("graft_deletes_total", tallies.map(_._2).sum)
+          Metrics.global.inc(route.upserts, tallies.map(_._1).sum)
+          Metrics.global.inc(route.deletes, tallies.map(_._2).sum)
         } else {
           val acts = batch.collect().toSeq // bounded: ≤ keys quiesced this tick
-          Payloads.deliver(sink, Payloads.fromActions(acts, maxBatch))
-          Metrics.global.inc("graft_upserts_total",
+          Payloads.deliver(sink, route.payloads(acts, maxBatch))
+          Metrics.global.inc(route.upserts,
             acts.count(_.action == SyncAction.Upsert).toLong)
-          Metrics.global.inc("graft_deletes_total",
+          Metrics.global.inc(route.deletes,
             acts.count(_.action == SyncAction.Delete).toLong)
         }
       }

@@ -188,4 +188,27 @@ class CheckpointUpgradeSpec extends SparkSpec {
       } finally q2.stop()
     }
   }
+
+  test("a CRD checkpoint stamped with state version 1 is refused before any batch runs") {
+    // version 1 kept the CRD route's state in its own class; version 2 runs
+    // both routes through Debounce.Pending, so an old CRD checkpoint cannot
+    // restart in place (the fix: one fresh checkpoint dir and one resync)
+    implicit val s: SparkSession = spark
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    implicit val enc: org.apache.spark.sql.Encoder[CrdPipeline.CrdEventRow] =
+      org.apache.spark.sql.Encoders.product[CrdPipeline.CrdEventRow]
+    val crd = new java.io.File(Files.createTempDirectory("crd_v1").toFile, "crd")
+    assert(crd.mkdirs())
+    Files.write(new java.io.File(crd, "_graft_state_version").toPath,
+      "1\n".getBytes("UTF-8"))
+    val source = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[CrdPipeline.CrdEventRow]
+    val sink = new RestSink(post = _ => 200, sleep = _ => (), jitter = () => 1.0)
+    val e = intercept[IllegalArgumentException] {
+      CrdPipeline.start(source.toDS(), sink,
+        SyncPipeline.Config(flushIntervalMs = 100, checkpointDir = crd.toString))
+    }
+    assert(e.getMessage.contains("state version 1"))
+    assert(crd.list().toSeq == Seq("_graft_state_version"), "no batch ran")
+  }
 }

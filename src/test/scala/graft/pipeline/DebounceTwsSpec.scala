@@ -8,8 +8,8 @@ import scala.collection.mutable.ArrayBuffer
 /** The transformWithState debounce path must reproduce the classic
   * flatMapGroupsWithState semantics exactly: the reference scenarios of
   * SyncPipelineSpec (delete bypass, last-state-wins) plus A10 no-op
-  * suppression, all through SyncPipeline.start with transformWithState=true
-  * (which also exercises the forced RocksDB state store).
+  * suppression, all through SyncPipeline.start with rocksDbState=true
+  * (the RocksDB state store, which selects the transformWithState path).
   */
 class DebounceTwsSpec extends SparkSpec {
 
@@ -48,7 +48,7 @@ class DebounceTwsSpec extends SparkSpec {
             .deleteQuietly(d.toFile))
           d.toString
         },
-        transformWithState = true))
+        rocksDbState = true))
     (source, received, query)
   }
 

@@ -189,4 +189,34 @@ class LexIndexSyncSpec extends SparkSpec {
     InvertedIndex.build(spark, live, dRef)
     assert(serve(d) == serve(dRef))
   }
+
+  test("each micro-batch is scanned once: progress numInputRows counts every event once") {
+    // a foreachBatch frame re-runs its source scan per action, and Spark
+    // adds every re-run to numInputRows (the IndexSyncSpec case, here for
+    // the lexical loop)
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    implicit val enc: org.apache.spark.sql.Encoder[DocEvent] =
+      org.apache.spark.sql.Encoders.product[DocEvent]
+    val d = tmp("lexsync_rows_idx")
+    val srcDir = tmp("lexsync_rows_src")
+    val ckpt = tmp("lexsync_rows_ckpt")
+    InvertedIndex.build(spark, docs, d)
+    val (batches, perBatch) = (3, 9)
+    (1 to batches).foreach { b =>
+      Files.writeString(java.nio.file.Paths.get(srcDir, f"b$b%02d.json"),
+        (0 until perBatch).map(i =>
+          s"""{"event_type":"UPDATE","event_seq":${b * 100 + i},""" +
+            s""""doc_id":${40 + i},"text":"dup rows pass$b token$i"}""")
+          .mkString("\n"))
+    }
+    val evs = spark.readStream.schema(enc.schema)
+      .option("maxFilesPerTrigger", "1").json(srcDir).as[DocEvent]
+    val q = LexIndexSync.start(evs, d, ckpt)
+    val rows = try {
+      q.processAllAvailable()
+      q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq
+    } finally q.stop()
+    assert(rows == Seq.fill(batches)(perBatch.toLong),
+      s"per-batch input rows $rows, written $perBatch per batch")
+  }
 }

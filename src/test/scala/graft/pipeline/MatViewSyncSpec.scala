@@ -151,4 +151,32 @@ class MatViewSyncSpec extends SparkSpec {
       Seq(("INSERT", 2L, 1.0)).toDF("op", "k", "v"), epochId = 3L, viewDir)
       == ((0L, 0L)))
   }
+
+  test("each micro-batch is scanned once: progress numInputRows counts every event once") {
+    // a foreachBatch frame re-runs its source scan per action, and Spark
+    // adds every re-run to numInputRows (the IndexSyncSpec case, here for
+    // the view loop)
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    import spark.implicits._
+    val viewDir = tmp("mvsync_rows_view")
+    val srcDir = tmp("mvsync_rows_src")
+    MatView.bootstrap(spark, Seq((1L, 5.0)).toDF("k", "v"),
+      Seq("k"), Seq("v"), viewDir)
+    val (batches, perBatch) = (3, 9)
+    (1 to batches).foreach { b =>
+      Files.writeString(java.nio.file.Paths.get(srcDir, f"b$b%02d.json"),
+        (0 until perBatch).map(i =>
+          s"""{"op":"INSERT","k":${i % 3},"v":${b * 10 + i}.5}""")
+          .mkString("\n"))
+    }
+    val evs = spark.readStream.schema("op STRING, k BIGINT, v DOUBLE")
+      .option("maxFilesPerTrigger", "1").json(srcDir)
+    val q = MatViewSync.start(evs, viewDir, tmp("mvsync_rows_ckpt"))
+    val rows = try {
+      q.processAllAvailable()
+      q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq
+    } finally q.stop()
+    assert(rows == Seq.fill(batches)(perBatch.toLong),
+      s"per-batch input rows $rows, written $perBatch per batch")
+  }
 }

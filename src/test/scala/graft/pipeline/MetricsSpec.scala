@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 import java.net.{HttpURLConnection, URI}
 import scala.io.Source
@@ -55,31 +56,44 @@ class MetricsSpec extends AnyFunSuite {
     val spark = graft.SparkSpec.session
     implicit val s: org.apache.spark.sql.SparkSession = spark
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    implicit val enc: org.apache.spark.sql.Encoder[ResourceEventRow] =
-      org.apache.spark.sql.Encoders.product[ResourceEventRow]
+    import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val ts = new java.sql.Timestamp(0)
     val sink = new RestSink(post = _ => 200, sleep = _ => ())
-    val source = MemoryStream[ResourceEventRow]
     def ev(name: String, typ: String, seq: Long) = ResourceEventRow(
       typ, seq, ts, s"ns/apps/v1/D/$name", "ns", name, "D", "apps/v1", "apps",
       null, null, ts)
-    val upsBefore = Metrics.global.value("graft_upserts_total")
-    val delsBefore = Metrics.global.value("graft_deletes_total")
-    val query = SyncPipeline.start(source.toDS(), sink,
-      SyncPipeline.Config(debounceMs = 100, flushIntervalMs = 50,
+    val instances = MemoryStream[ResourceEventRow]
+    val crds = MemoryStream[CrdPipeline.CrdEventRow]
+    // (the route's counters, its start, feed two upserts and one delete);
+    // each route counts under its own names and never under the other's
+    val routes = Seq[((String, String), SyncPipeline.Config => StreamingQuery, () => Unit)](
+      (("graft_upserts_total", "graft_deletes_total"),
+        SyncPipeline.start(instances.toDS(), sink, _),
+        () => instances.addData(ev("a", "ADD", 1), ev("b", "ADD", 2), ev("c", "DELETE", 3))),
+      (("graft_crd_upserts_total", "graft_crd_deletes_total"),
+        CrdPipeline.start(crds.toDS(), sink, _),
+        () => crds.addData(Seq("ADD" -> "a", "ADD" -> "b", "DELETE" -> "c")
+          .zipWithIndex.map { case ((t, n), i) =>
+            CrdPipeline.CrdEventRow(t, i + 1L, ts, s"$n.example.com") }: _*)))
+    val names = routes.flatMap { case ((ups, dels), _, _) => Seq(ups, dels) }
+    routes.foreach { case ((ups, dels), start, feed) =>
+      val before = names.map(n => n -> Metrics.global.value(n)).toMap
+      val query = start(SyncPipeline.Config(debounceMs = 100, flushIntervalMs = 50,
         checkpointDir =
           java.nio.file.Files.createTempDirectory("metrics_ckpt").toString))
-    try {
-      source.addData(ev("a", "ADD", 1), ev("b", "ADD", 2), ev("c", "DELETE", 3))
-      val deadline = System.currentTimeMillis() + 30000
-      while ((Metrics.global.value("graft_upserts_total") < upsBefore + 2 ||
-          Metrics.global.value("graft_deletes_total") < delsBefore + 1) &&
-          System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-    } finally query.stop()
-    assert(Metrics.global.value("graft_upserts_total") == upsBefore + 2)
-    assert(Metrics.global.value("graft_deletes_total") == delsBefore + 1)
+      try {
+        feed()
+        val deadline = System.currentTimeMillis() + 30000
+        while ((Metrics.global.value(ups) < before(ups) + 2 ||
+            Metrics.global.value(dels) < before(dels) + 1) &&
+            System.currentTimeMillis() < deadline)
+          Thread.sleep(100)
+      } finally query.stop()
+      val moved = names.map(n => n -> (Metrics.global.value(n) - before(n))).toMap
+      assert(moved == names.map(n => n ->
+        (if (n == ups) 2L else if (n == dels) 1L else 0L)).toMap, ups)
+    }
   }
 
   test("the index loop's epochs/upserts/deletes count and are scrapeable") {

@@ -121,35 +121,47 @@ class SyncPipelineSpec extends SparkSpec {
   test("keep-alive tick flushes recovered state with NO post-restart events") {
     // the EventTime/keep-alive option of VERDICT r2 item 10: without the
     // tick, the A18 test must nudge an event after restart; with it, the
-    // rate source alone drives micro-batches and the recovered timer fires
+    // rate source alone drives micro-batches and the recovered timer fires —
+    // on the CRD route too, which starts through the same SyncPipeline.start
     implicit val s: org.apache.spark.sql.SparkSession = spark
+    import spark.implicits._
     import java.nio.file.{Files, Paths}
-    val srcDir = Files.createTempDirectory("ka_src").toString
-    val ckpt = Files.createTempDirectory("ka_ckpt").toString
-    val received = ArrayBuffer.empty[String]
-    val sink = new RestSink(post = p => { received.synchronized { received += p }; 200 },
-      sleep = _ => (), jitter = () => 1.0)
-    // keepAliveTick must be on from the FIRST start: it adds a second source
-    // to the plan, and checkpointed source offsets are positional
-    def start() = SyncPipeline.start(
-      SyncPipeline.fileSource(spark, srcDir), sink,
-      SyncPipeline.Config(debounceMs = 3000, flushIntervalMs = 100,
-        checkpointDir = ckpt, keepAliveTick = true))
-    Files.writeString(Paths.get(srcDir, "a.json"),
-      """{"event_type":"ADD","event_seq":1,"ts":"2026-01-01T00:00:00Z","id":"ns/apps/v1/Deployment/quiet","namespace":"ns","name":"quiet","kind":"Deployment","apiVersion":"apps/v1","apiGroup":"apps","labels":{"version":"v1"},"annotations":null,"createdAt":"2026-01-01T00:00:00Z"}""")
-    val q1 = start()
-    try {
-      eventually() { if (q1.recentProgress.exists(_.numInputRows > 0)) Some(()) else None }
-    } finally q1.stop()
-    assert(received.synchronized { received.isEmpty }) // pending at stop
-    val q2 = start() // recover; NOTHING new is written to the source
-    try {
-      val upsert = eventually(timeoutMs = 40000) {
-        received.synchronized { received.find(_.contains("quiet")) }
-      }
-      assert(upsert.contains(""""labels":{"version":"v1"}"""))
-      assert(received.synchronized { received.count(_.contains("quiet")) } == 1)
-    } finally q2.stop()
+    type Start = (org.apache.spark.sql.Dataset[ResourceEventRow], RestSink,
+      SyncPipeline.Config) => org.apache.spark.sql.streaming.StreamingQuery
+    // (route, its start over the tailed log, the upsert the sink must get)
+    val routes = Seq[(String, Start, String => Boolean)](
+      ("instances", SyncPipeline.start(_, _, _),
+        _.contains(""""labels":{"version":"v1"}""")),
+      ("crds", (evs, sink, cfg) => CrdPipeline.start(evs.map(e =>
+        CrdPipeline.CrdEventRow(e.event_type, e.event_seq, e.ts, e.name)), sink, cfg),
+        _ == """{"upserts":["quiet"]}"""))
+    routes.foreach { case (route, startOn, isUpsert) =>
+      val srcDir = Files.createTempDirectory(s"ka_src_$route").toString
+      val ckpt = Files.createTempDirectory(s"ka_ckpt_$route").toString
+      val received = ArrayBuffer.empty[String]
+      val sink = new RestSink(post = p => { received.synchronized { received += p }; 200 },
+        sleep = _ => (), jitter = () => 1.0)
+      // keepAliveTick must be on from the FIRST start: it adds a second source
+      // to the plan, and checkpointed source offsets are positional
+      def start() = startOn(SyncPipeline.fileSource(spark, srcDir), sink,
+        SyncPipeline.Config(debounceMs = 3000, flushIntervalMs = 100,
+          checkpointDir = ckpt, keepAliveTick = true))
+      Files.writeString(Paths.get(srcDir, "a.json"),
+        """{"event_type":"ADD","event_seq":1,"ts":"2026-01-01T00:00:00Z","id":"ns/apps/v1/Deployment/quiet","namespace":"ns","name":"quiet","kind":"Deployment","apiVersion":"apps/v1","apiGroup":"apps","labels":{"version":"v1"},"annotations":null,"createdAt":"2026-01-01T00:00:00Z"}""")
+      val q1 = start()
+      try {
+        eventually() { if (q1.recentProgress.exists(_.numInputRows > 0)) Some(()) else None }
+      } finally q1.stop()
+      assert(received.synchronized { received.isEmpty }, route) // pending at stop
+      val q2 = start() // recover; NOTHING new is written to the source
+      try {
+        val upsert = eventually(timeoutMs = 40000) {
+          received.synchronized { received.find(_.contains("quiet")) }
+        }
+        assert(isUpsert(upsert), s"$route: $upsert")
+        assert(received.synchronized { received.count(_.contains("quiet")) } == 1, route)
+      } finally q2.stop()
+    }
   }
 
   test("executor-side sink delivers every payload with partition-local senders") {

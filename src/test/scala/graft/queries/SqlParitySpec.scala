@@ -100,12 +100,13 @@ class SqlParitySpec extends SparkSpec {
     "q_agg_weighted", "q_corpus_budget", "q_corpus_decontam",
     "q_dedup_embcos", "q_dedup_jaccard", "q_dedup_minhash",
     "q_dedup_minhash_pairs", "q_dedup_semantic", "q_dedup_simhash",
+    "q_dedup_simhash_pairs", "q_emb_centroid", "q_emb_project", "q_emb_quant",
+    "q_lm_score", "q_mm_audio", "q_mm_decode", "q_mm_frames", "q_mm_meta",
+    "q_mm_resize", "q_sample_weighted",
     // round 19: the core-scaling probe row (same mh dialect spellings as
     // q_dedup_minhash, so the existing rewrites carry it)
     "q_scale_cpu",
-    "q_dedup_simhash_pairs", "q_emb_centroid", "q_emb_project", "q_emb_quant",
-    "q_lm_score", "q_mm_audio", "q_mm_decode", "q_mm_frames", "q_mm_meta",
-    "q_mm_resize", "q_sample_weighted", "q_sim_pairs", "q_sim_range",
+    "q_sim_pairs", "q_sim_range",
     "q_sim_topk", "q_sim_knn_class", "q_events_retention",
     "q_events_resample", "q_index_fresh", "q_sample_temperature",
     "q_hybrid_rrf", "q_sim_topk_filtered",
