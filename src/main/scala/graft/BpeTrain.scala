@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Re-derive the frozen BPE merge table
   * ([[graft.functions.BpeTokenizer.Merges]]): standard BPE training over
   * the sf0.001 fixture documents, printed as the Scala literal body of
@@ -11,14 +9,7 @@ object BpeTrain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val nMerges = args.lift(1).map(_.toInt).getOrElse(48)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(8)
     try {
       val merges = graft.functions.BpeTokenizer.trainOnCorpus(spark,
         Tables.documents(spark, sfDir).select("doc_id", "text"), nMerges)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** ANN tuning probe: recall@k of each approximate similarity query vs the
   * exact ranking, with wall-clock, at an arbitrary sf-dir — the measurement
   * loop behind the QualityChecksSpec/KnnGraphSpec floors (the specs pin
@@ -12,15 +10,7 @@ import org.apache.spark.sql.SparkSession
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
 
     def run(name: String): (Array[org.apache.spark.sql.Row], Double) = {
       val t0 = System.nanoTime()

@@ -73,9 +73,7 @@ object StateProbe {
       s"unknown mode $mode: tws | noka | execsink | heap")
     val loadPerS = args.drop(2).headOption.map(_.toInt).getOrElse(5000)
     val soakMs = 60000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = GraftSession.local(32,
       // state partitions sized to the pipeline, not the box: every extra
       // state partition adds per-batch fixed commit/maintenance cost that
       // SERIALIZES on a single-box commit path (measured: 32 partitions ≈
@@ -85,16 +83,12 @@ object StateProbe {
       // count follows executor count there; locally 8 holds 125k keys per
       // RocksDB instance at the 10^6 design point, well within one
       // instance's comfort zone.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("STATE_PROBE_PARTITIONS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      "spark.sql.shuffle.partitions" ->
+        sys.env.getOrElse("STATE_PROBE_PARTITIONS", "8"),
       // changelog checkpointing: commit appends the batch's delta instead of
       // snapshotting every RocksDB instance per batch — at 10^6 keys the
       // full-snapshot path is per-batch time proportional to STATE size
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
     import graft.pipeline._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val s: SparkSession = spark

@@ -187,8 +187,8 @@ object GraftExpressions {
   * as `SparkSession.builder.withExtensions(new GraftExtensions)` or via
   * `spark.sql.extensions=graft.functions.GraftExtensions` on spark-submit —
   * every session (including thrift/connect ones) gets the engine's native
-  * expressions without imperative setup. The Verify/Bench/Plans mains build
-  * their sessions through this.
+  * expressions without imperative setup. Every main builds its session
+  * through this, via [[graft.GraftSession]].
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {

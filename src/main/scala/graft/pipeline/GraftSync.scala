@@ -75,6 +75,8 @@ object GraftSync {
     val mappedKind =
       graft.functions.KubeFunctions.kindToResourceType(col("kind"))
     val watched = events.filter(cfg.effectiveWatchFilter(mappedKind))
+    val isCrd = lower(col("kind"))
+      .isin("customresourcedefinition", "customresourcedefinitions")
 
     // A2 allow/blocklist for instances (CRDs blocklisted by default, so
     // they route ONLY to the capabilities pipeline below)
@@ -85,25 +87,34 @@ object GraftSync {
     // its own query (checkpoint `<dir>/crd`) — CRDs reach here through the
     // force-union in effectiveWatchFilter even when the A2 lists would
     // exclude them
-    val crdQuery =
+    import spark.implicits._
+    val cSink =
       if (!cfg.crdPipelineEnabled) None
-      else {
-        import spark.implicits._
-        val cSink = crdSink.getOrElse(RestSink.http(cfg.capabilitiesEndpoint))
-        val crdEvents = watched
-          .filter(lower(col("kind"))
-            .isin("customresourcedefinition", "customresourcedefinitions"))
-          .map(e => CrdPipeline.CrdEventRow(e.event_type, e.event_seq, e.ts, e.name))
-        Some(CrdPipeline.start(crdEvents, cSink,
-          cfg.copy(checkpointDir =
-            if (cfg.checkpointDir.isEmpty) "" else cfg.checkpointDir + "/crd")))
-      }
+      else Some(crdSink.getOrElse(RestSink.http(cfg.capabilitiesEndpoint)))
+    val crdQuery = cSink.map { sink =>
+      val crdEvents = watched.filter(isCrd)
+        .map(e => CrdPipeline.CrdEventRow(e.event_type, e.event_seq, e.ts, e.name))
+      CrdPipeline.start(crdEvents, sink, cfg.copy(checkpointDir =
+        if (cfg.checkpointDir.isEmpty) "" else cfg.checkpointDir + "/crd"))
+    }
 
-    // A19: RESYNC_INTERVAL_MIN cadence + POST /api/v1/resync, both replaying
-    // the snapshot through the same payload/sink path
-    val scheduler = ResyncScheduler.fromConfig(cfg,
-      () => SyncPipeline.resync(snapshot(spark, watchDir), iSink, cfg.maxBatch))
-      .start()
+    // A19: RESYNC_INTERVAL_MIN cadence + POST /api/v1/resync. Like the
+    // reference's relist of the GVRs it watches, each route replays only
+    // its own share of the snapshot through its own payload/sink path;
+    // the count is both routes' sum.
+    def resync(): Long = {
+      val snap = snapshot(spark, watchDir)
+      val instances =
+        SyncPipeline.resync(snap.filter(cfg.watchFilter(mappedKind)), iSink, cfg.maxBatch)
+      val crds = cSink.fold(0L) { sink =>
+        val names = snap.filter(isCrd).select("name").distinct().as[String].collect()
+        Payloads.deliver(sink, CrdPipeline.payloads(
+          names.toSeq.map(n => SyncAction(SyncAction.Upsert, n, None)), cfg.maxBatch))
+        names.length.toLong
+      }
+      instances + crds
+    }
+    val scheduler = ResyncScheduler.fromConfig(cfg, () => resync()).start()
     val api = ApiServer.fromConfig(cfg, scheduler).start()
     Running(instanceQuery, crdQuery, scheduler, api)
   }
@@ -122,16 +133,13 @@ object GraftSync {
     val watchDir = args.headOption
       .orElse(sys.env.get("WATCH_DIR"))
       .getOrElse(sys.error("pass the event-log dir as arg 1 or WATCH_DIR"))
-    val spark = SparkSession.builder()
-      .appName("graft-sync")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    // LOG_LEVEL (config.go:55, the reference's zap level) → log4j level.
-    // Applied by the production entrypoint only: wire() leaves the caller's
-    // session logging alone (tests share a quiet session).
-    spark.sparkContext.setLogLevel(GraftSync.log4jLevel(cfg.logLevel))
+    // spark-submit supplies the master. LOG_LEVEL (config.go:55, the
+    // reference's zap level) → log4j level, applied by the production
+    // entrypoint only: wire() leaves the caller's session logging alone
+    // (tests share a quiet session).
+    val spark = graft.GraftSession(None, log4jLevel(cfg.logLevel), Seq(
+      "spark.app.name" -> "graft-sync",
+      "spark.sql.shuffle.partitions" -> graft.GraftSession.cpus(32)))
     val running = wire(spark, cfg, watchDir)
     sys.addShutdownHook(running.close())
     // await ANY stream, not just instances: a dead CRD capabilities query

@@ -23,26 +23,14 @@ object GraphQueries {
     * lineitem, distinct pairs), node ids arithmetically disambiguated
     * (cust → 2k, supp → 2k+1) so the shuffle path carries no strings.
     * Materialized once per query — every iterative round consumes it.
-    *
-    * `replicaStride > 0` is the ScaleProbe hook: node keys offset by
-    * `(orderkey div stride) · stride`, so the ×N probe corpus (whose
-    * replicas offset ORDER keys but reuse dimension keys — realistic fact
-    * growth that would otherwise DEDUPE the distinct edge set back to the
-    * base graph) yields N disjoint copies of the graph and the probe
-    * times the operator, not the dedup. Identity on a single-replica dir
-    * (every orderkey div stride = 0).
     */
   private[graft] def fulfillmentEdges(s: org.apache.spark.sql.SparkSession,
       dir: String,
       edgePred: org.apache.spark.sql.Column = lit(true),
-      replicaStride: Long = 0L,
       wide: Boolean = true): org.apache.spark.sql.DataFrame = {
     val eo = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
     val li = Tables.lineitem(s, dir).filter(edgePred)
       .select("l_orderkey", "l_suppkey")
-    val off =
-      if (replicaStride <= 0) lit(0L)
-      else expr(s"(o_orderkey DIV ${replicaStride}L) * ${replicaStride}L")
     // DEDUP the FORWARD pairs, then mirror by explode (r19; r18 mirrored
     // before the distinct). The mirror map is injective and cust ids are
     // even / supplier ids odd, so a mirrored pair can never collide with
@@ -68,8 +56,8 @@ object GraphQueries {
     // scale-adaptive choice for whatever the predicate leaves.
     val fwd = li
       .join(eo, col("l_orderkey") === col("o_orderkey"))
-      .select(((col("o_custkey") + off) * 2).as("c"),
-        ((col("l_suppkey") + off) * 2 + 1).as("sn"))
+      .select((col("o_custkey").cast("long") * 2).as("c"),
+        (col("l_suppkey").cast("long") * 2 + 1).as("sn"))
     (if (wide)
       fwd.repartition(
         s.sparkContext.defaultParallelism, col("c"), col("sn"))
@@ -83,8 +71,7 @@ object GraphQueries {
   }
 
   /** PageRank d = 0.85 over an undirected edge frame — the body of
-    * q_graph_pagerank, exposed so ScaleProbe can price the operator on a
-    * properly-scaled edge set. Every node has out-degree ≥ 1 by the
+    * q_graph_pagerank. Every node has out-degree ≥ 1 by the
     * undirected construction, so no dangling-mass correction is needed.
     */
   private[graft] def pageRank(s: org.apache.spark.sql.SparkSession,
@@ -174,8 +161,7 @@ object GraphQueries {
         // closed-form checkable; at 100 TB each iteration is one shuffle
         // pair on the node key and the edge frame is reused from cache.
         // Census-sized broadcasts, materialized rounds, and the empty-
-        // graph contract live in [[pageRank]] (shared with ScaleProbe's
-        // disjoint-replica probe).
+        // graph contract live in [[pageRank]].
         pageRank(s, fulfillmentEdges(s, dir))
       },
       Some("""WITH cs AS (

@@ -90,6 +90,8 @@ class GraftSyncSpec extends SparkSpec {
 
       // ad-hoc resync over the real HTTP API replays the snapshot
       val before = iGot.size()
+      val crdUpsert = """{"upserts":["widgets.example.com"]}"""
+      val crdBefore = cGot.asScala.count(_ == crdUpsert)
       val conn = new java.net.URI(
         s"http://127.0.0.1:${running.api.port}/api/v1/resync").toURL
         .openConnection().asInstanceOf[java.net.HttpURLConnection]
@@ -97,12 +99,17 @@ class GraftSyncSpec extends SparkSpec {
       assert(conn.getResponseCode == 200)
       val body = scala.io.Source.fromInputStream(conn.getInputStream, "UTF-8").mkString
       conn.disconnect()
-      // snapshot = 3 non-deleted ids (lease + crd included: resync replays
-      // raw state like the reference's cache relist)
+      // snapshot = 3 non-deleted ids; each route replays only what it
+      // watches, like the reference's relist of its watched GVRs: the
+      // Deployment to instances, the CRD name to capabilities, the Lease
+      // to neither
       assert(body.contains(""""status":"ok""""), body)
+      assert(body.contains(""""resources":2"""), body)
       eventually() {
         if (iGot.size() > before) Some(()) else None
       }
+      assert(cGot.asScala.count(_ == crdUpsert) == crdBefore + 1)
+      assert(!iGot.asScala.exists(p => p.contains("noisy") || p.contains("widgets.example.com")))
     } finally { running.close() }
   }
 }

@@ -153,6 +153,17 @@ class SyncPipelineSpec extends SparkSpec {
         eventually() { if (q1.recentProgress.exists(_.numInputRows > 0)) Some(()) else None }
       } finally q1.stop()
       assert(received.synchronized { received.isEmpty }, route) // pending at stop
+      // the timeout's no-data batches keep the query planning: the stop may
+      // land on a planned, uncommitted batch that recovery would re-run and
+      // keep going from without the tick. Drop it, so the restart is quiet
+      // and only the tick can drive the recovered timer.
+      def batches(log: String) = new java.io.File(ckpt, log).list()
+        .filter(_.forall(_.isDigit)).map(_.toLong)
+      val last = batches("commits").max
+      batches("offsets").filter(_ > last).foreach { n =>
+        assert(new java.io.File(ckpt, s"offsets/$n").delete() &&
+          new java.io.File(ckpt, s"offsets/.$n.crc").delete(), s"$route: offsets/$n")
+      }
       val q2 = start() // recover; NOTHING new is written to the source
       try {
         val upsert = eventually(timeoutMs = 40000) {
