@@ -1,20 +1,27 @@
 package graft.queries
 
 import graft.Tables
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Graph analytics over relationship structure hiding in the relational
   * tables — the family q_dedup_clusters (connected components) opened,
-  * extended here with iterative rank propagation. Iterative graph
-  * algorithms on Spark are driver-unrolled loops of joins (the Pregel
-  * shape: ranks ⨝ edges on src, aggregate on dst, join back to nodes);
-  * the reused edge/node frames are materialized once and each round's
-  * rank vector materializes so its broadcast builds from a computed
-  * frame. Determinism across engines follows the catalog
-  * contract: per-edge contributions are a fixed double expression tree
-  * (IEEE ops on identical inputs → identical bits), pre-rounded and
-  * summed in exact DECIMAL so accumulation order can't flip a rank.
+  * extended here with iterative rank propagation. Both rows run the
+  * Pregel shape (each vertex sends a message along its out-edges, each
+  * destination combines what it receives) with the VERTEX STATE ON THE
+  * DRIVER: the label or rank vector is census-sized (customer + supplier
+  * key spaces, orders of magnitude under the edge set), so it ships to
+  * every round as one broadcast variable, and each round is exactly one
+  * Spark job over the checkpointed edge frame ([[pregelRound]]). The
+  * driver derives the next vector and the final top-20 itself. The edge
+  * frame is built and materialized once per query.
+  *
+  * Determinism across engines follows the catalog contract: per-edge
+  * contributions are a fixed double expression tree (IEEE ops on
+  * identical inputs → identical bits), pre-rounded and summed as exact
+  * scaled integers so accumulation order can't flip a rank; the rounding
+  * is Spark's own, evaluated as Columns over a local relation.
   */
 object GraphQueries {
 
@@ -22,12 +29,14 @@ object GraphQueries {
     * customer to every supplier that shipped one of its orders (orders ⨝
     * lineitem, distinct pairs), node ids arithmetically disambiguated
     * (cust → 2k, supp → 2k+1) so the shuffle path carries no strings.
-    * Materialized once per query — every iterative round consumes it.
+    * Every pair appears in both directions, so a vertex's in- and
+    * out-edges match one to one. Materialized once per query — every
+    * iterative round consumes it.
     */
-  private[graft] def fulfillmentEdges(s: org.apache.spark.sql.SparkSession,
+  private[graft] def fulfillmentEdges(s: SparkSession,
       dir: String,
-      edgePred: org.apache.spark.sql.Column = lit(true),
-      wide: Boolean = true): org.apache.spark.sql.DataFrame = {
+      edgePred: Column = lit(true),
+      wide: Boolean = true): DataFrame = {
     val eo = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
     val li = Tables.lineitem(s, dir).filter(edgePred)
       .select("l_orderkey", "l_suppkey")
@@ -70,76 +79,132 @@ object GraphQueries {
       .localCheckpoint()
   }
 
-  /** PageRank d = 0.85 over an undirected edge frame — the body of
-    * q_graph_pagerank. Every node has out-degree ≥ 1 by the
-    * undirected construction, so no dangling-mass correction is needed.
+  /** A driver-held vertex vector: `ids` ascending, `vals(i)` the value of
+    * vertex `ids(i)`.
     */
-  private[graft] def pageRank(s: org.apache.spark.sql.SparkSession,
-      edges: org.apache.spark.sql.DataFrame,
-      iters: Int = 3): org.apache.spark.sql.DataFrame = {
-    val nodes = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      .select(col("src").as("node"), col("deg"))
-      .localCheckpoint() // the census feeds every round's left join
-    // the node COUNT is a bounded driver scalar (the probe-cell /
-    // quota-table class): hoisting it to a literal removes a broadcast
-    // stage from every round — the teleport term is the same double
-    val nn = nodes.count()
-    if (nn == 0) {
+  private final class VertexVec(val ids: Array[Long], val vals: Array[Long])
+      extends Serializable {
+    def apply(v: Long): Long = vals(java.util.Arrays.binarySearch(ids, v))
+    def get(v: Long): Option[Long] = {
+      val i = java.util.Arrays.binarySearch(ids, v)
+      if (i >= 0) Some(vals(i)) else None
+    }
+  }
+
+  private object VertexVec {
+    val empty = new VertexVec(Array.empty, Array.empty)
+    def apply(pairs: Array[(Long, Long)]): VertexVec = {
+      val sorted = pairs.sortBy(_._1)
+      new VertexVec(sorted.map(_._1), sorted.map(_._2))
+    }
+  }
+
+  /** One Pregel round: every edge u→v sends `msg(state, u)` to v, and each
+    * destination's messages combine under `merge` (associative and
+    * commutative). `state` ships as a broadcast variable, which runs no
+    * job; the round itself is exactly ONE Spark job over the checkpointed
+    * edge frame — a map-side-combined reduceByKey, so the partials merge
+    * on the executors and the driver receives at most one row per vertex,
+    * the census-sized envelope the vector itself already has.
+    */
+  private def pregelRound(edges: DataFrame, state: VertexVec,
+      msg: (VertexVec, Long) => Long,
+      merge: (Long, Long) => Long): VertexVec = {
+    val b = edges.sparkSession.sparkContext.broadcast(state)
+    try VertexVec(edges.select("src", "dst").queryExecution.toRdd
+        .map(r => (r.getLong(1), msg(b.value, r.getLong(0))))
+        .reduceByKey(merge)
+        .collect())
+    finally b.destroy()
+  }
+
+  /** PageRank d = 0.85 over an undirected edge frame — the body of
+    * q_graph_pagerank. Every node has out-degree ≥ 1 by the undirected
+    * construction, so no dangling-mass correction is needed. Jobs: the
+    * degree census, then one per round ([[pregelRound]]); the rank
+    * arithmetic runs on the driver.
+    */
+  private[graft] def pageRank(s: SparkSession, edges: DataFrame,
+      iters: Int = 3): DataFrame = {
+    import s.implicits._
+    // in-degree = out-degree on the mirrored edge frame, so the census
+    // counts each destination's messages
+    val deg = pregelRound(edges, VertexVec.empty, (_, _) => 1L, _ + _)
+    val nn = deg.ids.length.toLong
+    if (nn == 0)
       // zero-row contract (EmptyInputSpec): an empty graph ranks
       // nothing — and guards the 1/N teleport against ANSI ÷0
-      import s.implicits._
-      Seq.empty[(Long, String, Long, Double)]
+      return Seq.empty[(Long, String, Long, Double)]
         .toDF("node", "kind", "key", "rank")
-    } else {
-      // the rank and contribution vectors are NODE-CENSUS-sized — the
-      // dimension class (customer + supplier key spaces), orders of
-      // magnitude under the edge set — so they ride BROADCASTS into
-      // the edge join and the census join: each round is one map-side
-      // pass over the cached edges plus a partial-aggregated 16k-row
-      // shuffle, no edge-set sort. (A graph whose census outgrows the
-      // broadcast budget swaps these hints for co-partitioned SMJs —
-      // the shape is otherwise identical.) Rounds MATERIALIZE
-      // (localCheckpoint): r19 A/B'd the lazy form — each round consumed
-      // once by the next round's broadcast build, 3 fewer jobs — and it
-      // measured SLOWER at matched windows (3.66-3.97 s vs 3.16-3.32 s
-      // subset pairs): the nested broadcast-build cascade executes the
-      // round chain less efficiently than three small materialized
-      // actions. Measured, kept the checkpoint.
-      //
-      // The per-edge contribution sums in LONG, not DECIMAL (r19):
-      // round(r/deg, 12) is an exact ≤12-decimal value d ≤ 1, so d·1e12
-      // is an exact integer ≤ 1e12 (recovered by one more scale-0 round —
-      // the double product sits within ~1e-4 of it), and Σd ≤ Σ r(u) = 1
-      // bounds the per-dst long sum at ~1e12, 6 orders under overflow.
-      // Bit-identical to the DECIMAL(28,12) sum it replaces: both sum the
-      // same exact integers (scaled), and long→double is exact below 2^53
-      // with IEEE division by 1e12 correctly rounding to the same double
-      // the decimal cast produced. What it buys: the hot per-round edge
-      // pass aggregates machine longs in codegen instead of allocating a
-      // BigDecimal per edge (the pass was ~30 µs/row in ProfileJobs).
-      var ranks = nodes
-        .select(col("node"), col("deg"),
-          round(lit(1.0) / lit(nn), 12).as("r"))
-      for (_ <- 1 to iters) {
-        val contrib = broadcast(ranks)
-          .join(edges, col("node") === col("src"))
-          .withColumn("cb",
-            round(round(col("r") / col("deg"), 12) * 1e12).cast("long"))
-          .groupBy("dst").agg(sum("cb").as("s"))
-        ranks = nodes
-          .join(broadcast(contrib), col("node") === col("dst"), "left")
-          .select(col("node"), col("deg"),
-            round(lit(0.15) / lit(nn) + lit(0.85) *
-              coalesce(col("s").cast("double") / 1e12, lit(0.0)), 12).as("r"))
-          .localCheckpoint()
-      }
-      ranks.orderBy(col("r").desc, col("node").asc).limit(20)
-        .select(col("node"),
-          when(col("node") % 2 === 0, lit("cust"))
-            .otherwise(lit("supp")).as("kind"),
-          expr("node DIV 2").as("key"),
-          round(col("r"), 8).as("rank"))
+    // The per-edge contribution is a LONG, not a DECIMAL (r19):
+    // round(r/deg, 12) is an exact ≤12-decimal value d ≤ 1, so d·1e12 is
+    // an exact integer ≤ 1e12 (recovered by one more scale-0 round — the
+    // double product sits within ~1e-4 of it), and Σd ≤ Σ r(u) = 1 bounds
+    // the per-dst long sum at ~1e12, 6 orders under overflow.
+    // Bit-identical to the oracle's DECIMAL(28,12) sum: both sum the same
+    // exact integers (scaled), and long→double is exact below 2^53 with
+    // IEEE division by 1e12 correctly rounding to the same double the
+    // decimal cast produced. The contribution depends on the source
+    // alone, so it is the vector a round ships; the executors only add.
+    val contrib = round(round(col("r") / col("deg"), 12) * 1e12).cast("long")
+    // Each step's rank and contribution are these Spark Columns evaluated
+    // over a local relation of the census: the optimizer folds a
+    // projection of a local relation on the driver (no job), with Spark's
+    // own round() semantics, and the relation keeps its row order.
+    def step(r: Column, sums: VertexVec): (Array[Double], VertexVec) = {
+      val out = deg.ids.indices
+        .map(i => (deg.vals(i), sums.get(deg.ids(i)).map(Long.box).orNull))
+        .toDF("deg", "s")
+        .select(col("deg"), r.as("r"))
+        .select(col("r"), contrib)
+        .as[(Double, Long)].collect()
+      (out.map(_._1), new VertexVec(deg.ids, out.map(_._2)))
     }
+    val rank = round(lit(0.15) / lit(nn) + lit(0.85) *
+      coalesce(col("s").cast("double") / 1e12, lit(0.0)), 12)
+    val (ranks, _) = (1 to iters).foldLeft(
+        step(round(lit(1.0) / lit(nn), 12), VertexVec.empty)) {
+      case ((_, cb), _) =>
+        step(rank, pregelRound(edges, cb, (c, u) => c(u), Math.addExact(_, _)))
+    }
+    // top-20 by (rank desc, node asc) under Spark's double ordering
+    val byRank: Ordering[Int] = (a, b) => {
+      val c = SQLOrderingUtil.compareDoubles(ranks(b), ranks(a))
+      if (c != 0) c else java.lang.Long.compare(deg.ids(a), deg.ids(b))
+    }
+    deg.ids.indices.sorted(byRank).take(20)
+      .map(i => (deg.ids(i), ranks(i))).toDF("node", "r")
+      .select(col("node"),
+        when(col("node") % 2 === 0, lit("cust"))
+          .otherwise(lit("supp")).as("kind"),
+        expr("node DIV 2").as("key"),
+        round(col("r"), 8).as("rank"))
+  }
+
+  /** Min-label propagation — the body of q_graph_components: every node
+    * starts labeled with its own id and each round takes the min of its
+    * label and its neighbors'. Jobs: one per round ([[pregelRound]]).
+    * Output: the 20 largest label groups, (members desc, label asc).
+    */
+  private[graft] def labelComponents(s: SparkSession, edges: DataFrame,
+      rounds: Int = 3): DataFrame = {
+    import s.implicits._
+    require(rounds >= 1, s"label propagation needs a round, got $rounds")
+    // a node absent from the vector still carries its own id, so round 1
+    // ships an empty vector; on the mirrored edge frame every node is
+    // some edge's destination, so round 1's partials are the node census
+    var labels = VertexVec.empty
+    for (_ <- 1 to rounds) {
+      val ml = pregelRound(edges, labels,
+        (l, u) => l.get(u).getOrElse(u), math.min(_, _))
+      labels = new VertexVec(ml.ids, ml.ids.indices.map { i =>
+        val v = ml.ids(i)
+        math.min(labels.get(v).getOrElse(v), ml.vals(i))
+      }.toArray)
+    }
+    labels.vals.toSeq.groupMapReduce(identity)(_ => 1L)(_ + _).toSeq
+      .sortBy { case (label, members) => (-members, label) }.take(20)
+      .toDF("label", "members")
   }
 
   val qs: Seq[GQuery] = Seq(
@@ -153,15 +218,14 @@ object GraphQueries {
         // two key spaces arithmetically (cust → 2k, supp → 2k+1), so the
         // graph needs no string keys on the shuffle path. Per iteration
         // r'(v) = 0.15/N + 0.85 · Σ_{u→v} r(u)/deg(u), with the
-        // contribution rounded to 12 and summed in DECIMAL(28,12); the
-        // teleport term keeps the recurrence a fixed two-term double
-        // expression. Undirected edges mean no dangling-mass correction
-        // is needed — every node has out-degree ≥ 1 by construction.
-        // Fixed iteration count (not convergence-tested) keeps the result
-        // closed-form checkable; at 100 TB each iteration is one shuffle
-        // pair on the node key and the edge frame is reused from cache.
-        // Census-sized broadcasts, materialized rounds, and the empty-
-        // graph contract live in [[pageRank]].
+        // contribution rounded to 12 and summed exactly (the oracle in
+        // DECIMAL(28,12), the engine as scaled longs); the teleport term
+        // keeps the recurrence a fixed two-term double expression.
+        // Undirected edges mean no dangling-mass correction is needed —
+        // every node has out-degree ≥ 1 by construction. Fixed iteration
+        // count (not convergence-tested) keeps the result closed-form
+        // checkable. The driver-held rank vector, the one-job rounds and
+        // the empty-graph contract live in [[pageRank]].
         pageRank(s, fulfillmentEdges(s, dir))
       },
       Some("""WITH cs AS (
@@ -227,27 +291,12 @@ object GraphQueries {
         // that real component structure survives the supplier hubs that
         // make the full fulfillment graph one blob in two hops.
         // Integer-only arithmetic, so the row is oracle-exact with zero
-        // float ceremony; the label census (≤ nodes rows) rides
-        // broadcasts exactly like the rank vector. Output: the 20 largest
+        // float ceremony; the label vector is driver-held exactly like
+        // the rank vector ([[labelComponents]]). Output: the 20 largest
         // label groups after round 3.
-        val edges = fulfillmentEdges(s, dir,
+        labelComponents(s, fulfillmentEdges(s, dir,
           edgePred = col("l_quantity") <= 2 && col("l_discount") > 0.08,
-          wide = false)
-        val nodes = edges.select(col("src").as("node")).distinct()
-          .localCheckpoint()
-        var labels = nodes.select(col("node"), col("node").as("label"))
-        for (_ <- 1 to 3) {
-          val inc = broadcast(labels)
-            .join(edges, col("node") === col("src"))
-            .groupBy("dst").agg(min("label").as("ml"))
-          labels = labels
-            .join(broadcast(inc), col("node") === col("dst"), "left")
-            .select(col("node"),
-              least(col("label"), coalesce(col("ml"), col("label"))).as("label"))
-            .localCheckpoint()
-        }
-        labels.groupBy("label").agg(count(lit(1)).as("members"))
-          .orderBy(col("members").desc, col("label").asc).limit(20)
+          wide = false))
       },
       Some("""WITH cs AS (
                 SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS sn

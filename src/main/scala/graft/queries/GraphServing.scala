@@ -909,7 +909,6 @@ object GraphServing {
       */
     def topKTenants(queries: DataFrame, k: Int,
         allowlists: Map[String, DataFrame]): DataFrame = {
-      import spark.implicits._
       val rows = queries.select(col("q_id").cast("long"),
           col("q_emb").cast("array<float>"), col("tenant").cast("string"))
         .collect()
@@ -936,21 +935,24 @@ object GraphServing {
         "q_id must be unique across a tenanted batch — it keys the walk")
       val widen =
         if (meta.n > 0) tenants.map(t => widenFor(allowlists(t))).max else 1
-      val qt = rows.toSeq.map(r => (r._1, r._3)).toDF("q_id", "tenant")
+      // q_id → tenant is functional, so the walk's local frames are
+      // tagged by a map literal, which the optimizer folds on the driver:
+      // no join, and the walk's (q_id, rnk) order carries through
+      val tenantOf = typedLit(rows.iterator.map(r => r._1 -> r._3).toMap)
+      val tagged = (local: DataFrame) =>
+        local.withColumn("tenant", element_at(tenantOf, col("q_id")))
       // the fleet's pairs frame is memoized + pinned once per allowlist
       // map ([[pairsFor]]); rows for tenants absent from this batch
       // simply never match the broadcast side
       val allowPairs = pairsFor(allowlists)
-      // (tenant, vec_id) pairs are distinct per tenant and q_id → tenant
-      // is functional, so the semi-join cannot duplicate a scored row
+      // (tenant, vec_id) pairs are distinct per tenant, so the semi-join
+      // cannot duplicate a scored row
       val filter = (scored: DataFrame) => allowPairs
-        .join(broadcast(scored.join(broadcast(qt), "q_id")),
-          Seq("tenant", "vec_id"))
+        .join(broadcast(tagged(scored)), Seq("tenant", "vec_id"))
         .select("q_id", "vec_id", "cos_r")
-      walkCore(rows.map(r => (r._1, r._2)), k, -1, -1, widen, Some(filter))
-        .join(broadcast(qt), "q_id")
+      tagged(walkCore(rows.map(r => (r._1, r._2)), k, -1, -1, widen,
+        Some(filter)))
         .select("q_id", "rnk", "vec_id", "cos", "tenant")
-        .orderBy("q_id", "rnk")
     }
 
     private def walkTopK(queries: DataFrame, k: Int, beam: Int,

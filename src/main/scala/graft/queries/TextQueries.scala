@@ -155,14 +155,17 @@ object TextQueries {
     GQuery(
       "q_dedup_minhash",
       (s, dir) => {
-        // staged shingle projection — see q_dedup_minhash_pairs: the 9
-        // consuming HOF expressions would otherwise each re-tokenize
+        // native kernel — value-identical to the HOF signature
+        // array(seeds.map(minhash(shingles(tokens(text), 5), _)))
+        // (MinHashSigSpec parity; the DuckDB oracle is the independent
+        // proof): one codegen'd call per row instead of nine interpreted
+        // transform(md5 …) trees
         Tables.documents(s, dir)
-          .select(col("doc_id"), shingles(tokens(col("text")), 5).as("sh"))
+          .select(col("doc_id"), minhashSigFast(col("text"), 5, 8).as("mh"))
           .select(
             col("doc_id"),
-            minhashSignature(col("sh"), 8).as("sig"),
-            substring(minhash(col("sh"), 0), 1, 8).as("band0"))
+            concat_ws("|", col("mh")).as("sig"),
+            substring(element_at(col("mh"), 1), 1, 8).as("band0"))
           .orderBy("doc_id")
       },
       Some {

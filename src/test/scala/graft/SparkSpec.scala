@@ -10,6 +10,30 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf001 = "/root/testdata/sf0.001"
+
+  /** Jobs the body runs — listener-counted, then settled until the async
+    * listener bus has been quiet for three 100 ms polls.
+    */
+  def jobsRun(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      var last = n.get(); var stable = 0
+      while (stable < 3) {
+        Thread.sleep(100)
+        val c = n.get()
+        if (c == last) stable += 1 else { stable = 0; last = c }
+      }
+      last
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {

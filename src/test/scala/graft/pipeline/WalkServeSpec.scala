@@ -238,30 +238,6 @@ class WalkServeSpec extends SparkSpec {
     directH.close()
   }
 
-  /** Jobs the body runs — listener-counted with an async-bus settle
-    * (the GraphFilteredWalkSpec idiom).
-    */
-  private def jobsRun(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var last = n.get(); var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        val c = n.get()
-        if (c == last) stable += 1 else { stable = 0; last = c }
-      }
-      last
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("a mixed batch of 8 tenants answers in ONE walk: per-tenant parity with direct filtered calls, job count does not scale with the tenant count") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -330,6 +306,10 @@ class WalkServeSpec extends SparkSpec {
     info(s"walk jobs: 2 tenants = $j2, 8 tenants = $j8")
     assert(j8 <= j2 + 2,
       s"job count scaled with tenant count ($j2 -> $j8) — the batch must walk once")
+    // measured: the unfiltered walk's 7 jobs plus one for the allowlist
+    // pairs join; the tenant tag and the (q_id, rnk) order come from the
+    // driver (a Spark join plus orderBy there cost 13 jobs in all)
+    assert(j8 <= 8, s"$j8 jobs for a tenant batch")
     directH.close()
   }
 

@@ -114,28 +114,6 @@ class GraphFilteredWalkSpec extends SparkSpec {
       rows.map(_.toSeq.mkString("|")).sorted.toSeq)
   }
 
-  /** Jobs the body runs — listener-counted with an async-bus settle. */
-  private def jobsRun(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var last = n.get(); var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        val c = n.get()
-        if (c == last) stable += 1 else { stable = 0; last = c }
-      }
-      last
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("the widen comes from the LIVE fraction — stale allowlist ids cannot suppress it — and is memoized per allowlist frame") {
     // a real tenant allowlist carries dead ids (stale lists, superset
     // predicates): 1000 ids that exist nowhere in the corpus. Counting

@@ -28,30 +28,6 @@ class GraphWalkStateSpec extends SparkSpec {
     d
   }
 
-  /** Jobs the body runs — listener-counted with an async-bus settle
-    * (the GraphFilteredWalkSpec idiom).
-    */
-  private def jobsRun(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var last = n.get(); var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        val c = n.get()
-        if (c == last) stable += 1 else { stable = 0; last = c }
-      }
-      last
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   /** (graph dir, pack dir) over `corpus`. */
   private def pack(corpus: DataFrame, name: String): (String, String) = {
     val gd = tmp(s"${name}_graph")
